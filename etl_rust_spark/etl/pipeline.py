@@ -17,7 +17,13 @@ Spark-first lifecycle (one logical plan, Catalyst-scheduled):
    keeps the once-only fetch guarantee, gives a replayable audit log,
    and every table derivation becomes a columnar scan with pushdown.
 4. ``chain.transform`` over the staged raw → 7 table DataFrames (X-02).
-5. ``write_tables`` fan-out with idempotent block-bucket overwrite
+5. Concurrent fan-out, as the reference publishes every table at once
+   through one publisher per table: each fact-table write
+   (``write_tables``, idempotent block-bucket overwrite) and each entity
+   merge (``merge_entity_table``) runs on its own driver thread, so
+   their Spark jobs overlap instead of queueing behind each other's
+   fixed per-job latency.  The threads inherit the caller's job group
+   and description.  ``blocks`` commits alone, after every other sink
    (K-08 + S-08 exactly-once design).
 
 Resume (S-08): ``resume=True`` consults the blocks sink's high-watermark
@@ -26,9 +32,12 @@ and skips the already-indexed prefix — the sink is the checkpoint.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_rust_spark.etl.writer import (
@@ -37,7 +46,10 @@ from etl_rust_spark.etl.writer import (
     write_tables,
 )
 from etl_rust_spark.sources.chain import ChainConfig
-from etl_rust_spark.sources.checkpoint import pick_up_from_previous_range
+from etl_rust_spark.sources.checkpoint import (
+    pick_up_from_previous_range,
+    sink_has_data,
+)
 from etl_rust_spark.sources.ranges import block_range
 
 __all__ = ["RunStats", "run_range"]
@@ -55,6 +67,25 @@ class RunStats:
     @property
     def total_records(self) -> int:
         return sum(self.records.values())
+
+
+def _run_concurrently(
+    spark: SparkSession, sinks: dict[str, Callable[[], int]]
+) -> dict[str, int]:
+    """Run every sink on its own driver thread and return their counts.
+
+    Each thread target is wrapped separately, so each gets its own copy
+    of the caller's local properties (job group, description): a shared
+    copy would let one thread's SQL execution id leak into another's.
+    Waits for every sink before re-raising the first failure in sink
+    order, so no job of the call is still running when it returns.
+    """
+    with ThreadPoolExecutor(max_workers=max(1, len(sinks))) as pool:
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(fn))
+            for name, fn in sinks.items()
+        }
+    return {name: f.result() for name, f in futures.items()}
 
 
 def run_range(
@@ -96,7 +127,7 @@ def run_range(
     # materializes them eagerly — Spark cannot otherwise overwrite a path
     # it is still reading from.
     lo, hi = start // bucket_size, (end - 1) // bucket_size
-    try:
+    if sink_has_data(spark, raw_path):
         carried = (
             spark.read.parquet(raw_path)
             .where(f"block_bucket BETWEEN {lo} AND {hi}")
@@ -104,21 +135,28 @@ def run_range(
             .localCheckpoint()
         )
         raw = raw.unionByName(carried)
-    except Exception:  # first run: no staged raw yet
-        pass
     # Stage aligned to the same bucket/overwrite discipline as the tables.
-    raw.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("block_bucket").parquet(raw_path)
+    # The write rewrites buckets [lo, hi] whole, so the rows it writes are
+    # exactly the staged rows read back below: count them on the write.
+    staged_rows = Observation()
+    raw.observe(staged_rows, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).option("partitionOverwriteMode", "dynamic").partitionBy(
+        "block_bucket"
+    ).parquet(raw_path)
 
     # Derive tables from every staged block in the buckets this range
     # touches (not just [start, end)): table writes dynamically overwrite
     # whole buckets, so a resume that starts mid-bucket must re-derive the
     # bucket's earlier blocks too or they'd be dropped from the sink.
-    staged = spark.read.parquet(raw_path).where(
-        f"block_bucket BETWEEN {lo} AND {hi}"
+    # Those buckets hold only what was just written, so its schema is
+    # known and the read needs no footer-inference job.
+    staged = (
+        spark.read.schema(raw.schema)
+        .parquet(raw_path)
+        .where(f"block_bucket BETWEEN {lo} AND {hi}")
     )
-    stats = RunStats(start=start, end=end, raw_blocks=staged.count())
+    stats = RunStats(start=start, end=end, raw_blocks=int(staged_rows.get["n"]))
     tables = chain.transform(staged.select("block_index", "response_json"))
     # Entity (first-seen dimension) tables can't use the bucket-overwrite
     # path: their min(block_index) is computed over THIS run's staged
@@ -136,16 +174,29 @@ def run_range(
     # resume would skip them forever.  Written last, a crash anywhere in
     # the fan-out leaves the watermark un-advanced; the resumed run
     # re-derives the range and the idempotent bucket overwrite makes
-    # partially-committed tables consistent.  Kill-tested in
+    # partially-committed tables consistent.  The other sinks commit
+    # concurrently, in any order; blocks starts only once all of them
+    # have finished, and not at all if any failed.  Kill-tested in
     # tests/test_etl.py::test_kill_between_sinks_then_resume_is_exactly_once.
     watermark = {t: tables.pop(t) for t in ("blocks",) if t in tables}
-    stats.records = write_tables(
-        tables, out_dir, fmt=fmt, layout=layout, bucket_size=bucket_size
-    )
-    for name, df in entities.items():
-        stats.records[name] = merge_entity_table(
-            df, f"{out_dir}/{name}", entity_keys[name], fmt=fmt
+
+    def fact(name: str) -> Callable[[], int]:
+        return lambda: write_tables(
+            {name: tables[name]},
+            out_dir,
+            fmt=fmt,
+            layout=layout,
+            bucket_size=bucket_size,
+        )[name]
+
+    def entity(name: str) -> Callable[[], int]:
+        return lambda: merge_entity_table(
+            entities[name], f"{out_dir}/{name}", entity_keys[name], fmt=fmt
         )
+
+    sinks = {name: fact(name) for name in tables}
+    sinks.update((name, entity(name)) for name in entities)
+    stats.records = _run_concurrently(spark, sinks)
     stats.records.update(
         write_tables(
             watermark, out_dir, fmt=fmt, layout=layout, bucket_size=bucket_size

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from etl_rust_spark.sources.checkpoint import sink_has_data
+
 __all__ = ["time_bucket_cols", "write_table", "write_tables", "merge_entity_table"]
 
 DEFAULT_BUCKET_SIZE = 1000
@@ -117,33 +119,40 @@ def merge_entity_table(
     is the right trade; on a lakehouse table format (Delta/Iceberg) this
     becomes a MERGE and the rewrite is avoided.
 
-    ``localCheckpoint`` materializes the merged frame eagerly — Spark
-    cannot overwrite a path it is still reading from.
+    When the sink exists, ``localCheckpoint`` materializes the merged
+    frame eagerly — Spark cannot overwrite a path it is still reading
+    from; an existing sink that cannot be read (corrupt file, missing
+    column) raises rather than being replaced.  An absent sink needs
+    no checkpoint.  The row count rides the write as an ``Observation``
+    (no count job).
     """
+    if fmt not in ("parquet", "jsonl"):
+        raise ValueError(f"unknown format {fmt!r}")
     spark = df.sparkSession
-    try:
+    exists = sink_has_data(spark, path)
+    merged = df
+    if exists:
         existing = (
             spark.read.parquet(path) if fmt == "parquet" else spark.read.json(path)
         )
         merged = df.unionByName(existing.select(*df.columns))
-    except Exception:  # first run: sink absent
-        merged = df
     w = Window.partitionBy(key_col).orderBy(F.col("block_index"))
     out = (
         merged.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
-        .localCheckpoint()
     )
-    n = out.count()
-    writer = out.write.mode("overwrite")
+    if exists:
+        out = out.localCheckpoint()
+    obs = Observation()
+    writer = out.observe(obs, F.count(F.lit(1)).alias("n_records")).write.mode(
+        "overwrite"
+    )
     if fmt == "parquet":
         writer.parquet(path)
-    elif fmt == "jsonl":
-        writer.json(path)
     else:
-        raise ValueError(f"unknown format {fmt!r}")
-    return n
+        writer.json(path)
+    return int(obs.get["n_records"])
 
 
 def write_tables(

@@ -283,14 +283,18 @@ class SyntheticChain:
         # in for call_getMultipleAccounts; a real config swaps the
         # expressions for a mapPartitions batched RPC over the SAME
         # distinct-keys frame.
+        # ``txs`` already carries each block's timestamp, so the lookup
+        # needs no join back to ``blocks`` (a second parse + broadcast).
         accounts = (
-            instructions.join(
-                blocks.select("block_index", "block_timestamp"), "block_index"
+            txs.select(
+                "block_index",
+                "block_timestamp",
+                F.explode("tx.instructions").alias("ins"),
             )
             .select(
                 "block_index",
                 "block_timestamp",
-                F.explode("accounts").alias("pubkey"),
+                F.explode("ins.accounts").alias("pubkey"),
             )
             .groupBy("pubkey")
             .agg(

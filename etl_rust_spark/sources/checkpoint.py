@@ -19,18 +19,54 @@ from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 __all__ = [
+    "sink_has_data",
     "sink_high_watermark",
     "reverse_resume_end",
     "pick_up_from_previous_range",
 ]
 
 
+def _hidden(name: str) -> bool:
+    # Spark's file-index rule: ``_``/``.`` names are commit markers,
+    # summaries and in-flight ``_temporary`` output, except partition
+    # directories such as ``_c=1``.
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def sink_has_data(spark: SparkSession, path: str) -> bool:
+    """True when ``path`` holds at least one data file a Spark read would
+    scan.  A missing path, or one holding only markers or the
+    ``_temporary`` leftovers of a crashed first write, is absent.
+
+    Checked through the Hadoop FileSystem API (any scheme the session
+    can read), so callers read an existing sink without a blanket
+    ``except``: a corrupt file or a schema mismatch in a sink that does
+    exist raises instead of passing for a first run.
+    """
+    jvm = spark._jvm
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+
+    def has_file(p) -> bool:
+        for st in fs.listStatus(p):
+            if _hidden(st.getPath().getName()):
+                continue
+            if not st.isDirectory() or has_file(st.getPath()):
+                return True
+        return False
+
+    return bool(fs.exists(root)) and has_file(root)
+
+
 def sink_high_watermark(spark: SparkSession, blocks_path: str) -> int | None:
     """Max committed ``block_index`` in the sink, or None if empty/absent."""
-    try:
-        df = spark.read.parquet(blocks_path)
-    except Exception:
+    if not sink_has_data(spark, blocks_path):
         return None
+    df = spark.read.parquet(blocks_path)
     row = df.agg(F.max("block_index").alias("hw")).collect()[0]
     return row["hw"]
 
@@ -54,10 +90,9 @@ def reverse_resume_end(
     Cost: indices-only distinct + one global-window pass — a resume-time
     metadata operation over 8-byte keys, not a data-plane scan.
     """
-    try:
-        df = spark.read.parquet(blocks_path)
-    except Exception:
+    if not sink_has_data(spark, blocks_path):
         return None
+    df = spark.read.parquet(blocks_path)
     idx = (
         df.select("block_index")
         .where((F.col("block_index") >= start) & (F.col("block_index") < end))

@@ -103,6 +103,136 @@ def test_kill_between_sinks_then_resume_is_exactly_once(spark, chain, tmp_path, 
             assert got == want, f"{t} diverged after kill-before-{kill_table}"
 
 
+def _drain_listener_bus(spark):
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def test_failed_sink_waits_for_running_sinks(spark, chain, tmp_path, monkeypatch):
+    """Sinks commit concurrently, one driver thread each.  A sink that
+    fails while another is still running makes run_range raise only once
+    every sink has finished: no job of the call outlives it, and the
+    blocks checkpoint never commits."""
+    import threading
+
+    from etl_rust_spark.etl import writer as writer_mod
+
+    real_write_table = writer_mod.write_table
+    failed = threading.Event()
+    finished = []
+
+    def patched(df, path, **kw):
+        table = path.rsplit("/", 1)[1]
+        if table == "instructions":
+            failed.set()
+            raise RuntimeError("simulated sink failure")
+        if table == "transactions":
+            # Still running when the other sink fails: its jobs start
+            # only after the failure.
+            assert failed.wait(120)
+            n = real_write_table(df, path, **kw)
+            finished.append(table)
+            return n
+        return real_write_table(df, path, **kw)
+
+    monkeypatch.setattr(writer_mod, "write_table", patched)
+    out = tmp_path / "sink"
+    with pytest.raises(RuntimeError, match="simulated sink failure"):
+        run_range(spark, chain, 0, 30, str(out), bucket_size=10)
+    _drain_listener_bus(spark)
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    assert finished == ["transactions"]
+    assert (out / "transactions" / "block_bucket=2").is_dir()
+    # A dynamic-overwrite commit writes no _SUCCESS marker, so check
+    # that blocks wrote nothing at all.
+    assert not (out / "blocks" / "_SUCCESS").exists()
+    assert not (out / "blocks").exists()
+
+
+def _call_jobs(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return the ids of the jobs
+    it launched, asserting that every one of them carries the group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    spark.range(1).collect()  # marker: the latest job belongs to no group
+    _drain_listener_bus(spark)
+    before = max(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "run_range under test")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    _drain_listener_bus(spark)
+    assert max(tracker.getJobIdsForGroup(None)) == before  # none lost the group
+    ids = sorted(tracker.getJobIdsForGroup(group))
+    assert ids == list(range(before + 1, before + 1 + len(ids)))
+    return ids
+
+
+def test_run_range_jobs_carry_caller_group_and_count(spark, chain, tmp_path):
+    """Every job of a run_range call, sink threads included, belongs to
+    the caller's job group; and the job count of a fresh-sink backfill
+    and of a resumed tail is pinned, so a re-added count job or an
+    eager checkpoint of an absent sink fails here."""
+    out = str(tmp_path / "sink")
+    backfill = _call_jobs(
+        spark, "etl-backfill", lambda: run_range(spark, chain, 0, 30, out, bucket_size=10)
+    )
+    tail = _call_jobs(
+        spark,
+        "etl-tail",
+        lambda: run_range(spark, chain, 0, 40, out, resume=True, bucket_size=10),
+    )
+    assert (len(backfill), len(tail)) == (10, 20)
+
+
+def test_corrupt_staged_raw_raises_instead_of_dropping_blocks(spark, chain, tmp_path):
+    """A staged raw bucket that cannot be read is a failure, not a first
+    run: folding nothing back in would overwrite the bucket without its
+    earlier blocks and drop them from every table."""
+    out = tmp_path / "sink"
+    run_range(spark, chain, 0, 15, str(out), bucket_size=10)
+    part = next((out / "_raw" / "block_bucket=1").glob("*.parquet"))
+    part.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="block_bucket=1"):
+        run_range(spark, chain, 15, 20, str(out), bucket_size=10)
+    blocks = _read_blocks(spark, str(out))
+    assert sorted(r.block_index for r in blocks.collect()) == list(range(15))
+
+
+def test_entity_sink_schema_mismatch_raises_instead_of_replacing(spark, chain, tmp_path):
+    """An existing entity sink the merge cannot read is not an absent
+    sink: the merge raises and leaves it as it was."""
+    out = tmp_path / "sink"
+    run_range(spark, chain, 0, 10, str(out), bucket_size=10)
+    accounts = str(out / "accounts")
+    legacy = str(tmp_path / "legacy")
+    spark.read.parquet(accounts).drop("owner").write.parquet(legacy)
+    spark.read.parquet(legacy).write.mode("overwrite").parquet(accounts)
+    n = spark.read.parquet(accounts).count()
+    with pytest.raises(Exception, match="owner"):
+        run_range(spark, chain, 10, 20, str(out), bucket_size=10)
+    kept = spark.read.parquet(accounts)
+    assert kept.count() == n and "owner" not in kept.columns
+    assert not (out / "blocks" / "block_bucket=1").exists()
+
+
+def test_absent_sink_means_no_data_files(spark, tmp_path):
+    """A crashed first write (markers and _temporary leftovers only)
+    counts as absent, so resume starts over; any data file is present."""
+    from etl_rust_spark.sources.checkpoint import sink_has_data
+
+    path = tmp_path / "blocks"
+    assert not sink_has_data(spark, str(path))
+    (path / "_temporary" / "0").mkdir(parents=True)
+    (path / "_temporary" / "0" / "part-0.parquet").write_bytes(b"x")
+    (path / ".hidden").write_bytes(b"x")
+    assert not sink_has_data(spark, str(path))
+    (path / "block_bucket=0").mkdir()
+    assert not sink_has_data(spark, str(path))
+    (path / "block_bucket=0" / "part-0.parquet").write_bytes(b"x")
+    assert sink_has_data(spark, str(path))
+
+
 def test_entity_tables_unique_across_runs(spark, chain, tmp_path):
     # ADVICE r1: accounts/tokens derive first-seen from ONLY the current
     # run's buckets — two disjoint runs used to produce duplicate
@@ -723,11 +853,10 @@ _needs_zstd_cli = pytest.mark.skipif(
 
 @_needs_zstd_cli
 def test_read_corpus_zstd_jsonl(spark, tmp_path):
-    """.jsonl.zst (the HuggingFace shard format) routes through the
-    Python-codec path — per-file parallel binaryFile decode via the
-    in-repo RFC 8878 zstd decoder — with the same corrupt-record spill
-    semantics as the native reader.  Fixtures come from the CANONICAL
-    CLI tool, not our own encoder."""
+    """.jsonl.zst (the HuggingFace shard format) decodes on Spark's
+    built-in JVM zstd codec, with the same corrupt-record spill as every
+    other JSONL route.  Fixtures come from the CANONICAL CLI tool, not
+    our own encoder."""
     import subprocess
 
     from etl_rust_spark.etl.ingest import read_corpus
@@ -791,3 +920,42 @@ def test_read_corpus_zstd_multi_shard_content_ids(spark, tmp_path):
     rows = got.collect()
     assert len(rows) == 15
     assert len({r.doc_id for r in rows}) == 15  # distinct content hashes
+
+
+def _write_zstd_shards(d, n_shards=3, per_shard=5):
+    import json as _json
+
+    import pyarrow as pa
+
+    d.mkdir()
+    for s in range(n_shards):
+        with pa.output_stream(str(d / f"part-{s}.jsonl.zst"), compression="zstd") as f:
+            for i in range(per_shard):
+                f.write((_json.dumps({"doc_id": s * 100 + i, "text": f"doc {s} {i}"}) + "\n").encode())
+
+
+def test_read_corpus_zstd_glob_and_dir_agree(spark, tmp_path):
+    """A glob of .jsonl.zst shards and the directory holding them take
+    the same JVM codec route and return the same rows."""
+    from etl_rust_spark.etl.ingest import read_corpus
+
+    d = tmp_path / "shards"
+    _write_zstd_shards(d)
+    kw = dict(fmt="jsonl", lang_field=None, source_field=None)
+    by_glob = sorted(map(tuple, read_corpus(spark, str(d / "*.jsonl.zst"), **kw).collect()))
+    by_dir = sorted(map(tuple, read_corpus(spark, str(d), **kw).collect()))
+    assert len(by_glob) == 15
+    assert by_glob == by_dir
+
+
+def test_read_corpus_truncated_zstd_shard_raises(spark, tmp_path):
+    """A truncated .zst shard fails the read loudly; it is not read as a
+    shorter corpus."""
+    from etl_rust_spark.etl.ingest import read_corpus
+
+    d = tmp_path / "shards"
+    _write_zstd_shards(d, n_shards=1, per_shard=200)
+    shard = d / "part-0.jsonl.zst"
+    shard.write_bytes(shard.read_bytes()[:-40])
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        read_corpus(spark, str(d / "*.jsonl.zst"), fmt="jsonl").collect()
