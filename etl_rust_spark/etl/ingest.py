@@ -23,6 +23,9 @@ Compression: ``.gz``/``.bz2`` and ``.zst`` (``.jsonl.zst`` is the
 HuggingFace shard format) decode on Spark's built-in JVM codecs, for a
 glob of shards and a directory alike; ``.xz``, which Spark ships no
 codec for, routes through a per-file-parallel Python path (stdlib lzma).
+The route follows the files a path resolves to, so a glob and a
+directory of ``.xz`` shards route alike; a path mixing ``.xz`` with
+other codecs is refused.
 """
 
 from __future__ import annotations
@@ -32,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_rust_spark.operators.hashes import MINHASH_P, spark_h
+from etl_rust_spark.sources.checkpoint import data_files
 
 __all__ = ["read_corpus", "ingest_corpus"]
 
@@ -45,9 +49,17 @@ _FORMATS = ("jsonl", "csv", "avro", "warc")
 _PYTHON_CODEC_EXTS = (".xz",)
 
 
-def _python_codec_needed(path: str) -> bool:
-    p = path.rstrip("/")
-    return p.endswith(_PYTHON_CODEC_EXTS)
+def _python_codec_needed(spark: SparkSession, path: str) -> bool:
+    """Route by the files ``path`` resolves to (a glob, a directory or a
+    file), not by its own suffix: Spark's reader would turn every line
+    of an ``.xz`` shard into a dropped corrupt record."""
+    xz = {n.endswith(_PYTHON_CODEC_EXTS) for n in data_files(spark, path)}
+    if len(xz) > 1:
+        raise ValueError(
+            f"corpus path {path!r} mixes {'/'.join(_PYTHON_CODEC_EXTS)} shards "
+            "with other files; read them separately"
+        )
+    return xz == {True}
 
 
 def _read_jsonl_python_codec(
@@ -162,7 +174,7 @@ def read_corpus(
         if source_field:
             fields.append(T.StructField(source_field, T.StringType()))
         fields.append(T.StructField("_corrupt_record", T.StringType()))
-        if _python_codec_needed(path):
+        if _python_codec_needed(spark, path):
             raw = _read_jsonl_python_codec(spark, path, T.StructType(fields))
         else:
             raw = spark.read.schema(T.StructType(fields)).option(

@@ -19,6 +19,7 @@ from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 __all__ = [
+    "data_files",
     "sink_has_data",
     "sink_high_watermark",
     "reverse_resume_end",
@@ -37,29 +38,41 @@ def _hidden(name: str) -> bool:
     )
 
 
-def sink_has_data(spark: SparkSession, path: str) -> bool:
-    """True when ``path`` holds at least one data file a Spark read would
-    scan.  A missing path, or one holding only markers or the
-    ``_temporary`` leftovers of a crashed first write, is absent.
+def data_files(spark: SparkSession, path: str):
+    """Yield the names of the data files a Spark read of ``path`` would
+    scan: the files ``path`` (a glob allowed) matches, and the files
+    under the directories it matches, skipping hidden names below them.
 
-    Checked through the Hadoop FileSystem API (any scheme the session
-    can read), so callers read an existing sink without a blanket
-    ``except``: a corrupt file or a schema mismatch in a sink that does
-    exist raises instead of passing for a first run.
+    Listed through the Hadoop FileSystem API, so any scheme the session
+    can read works.  A missing path yields nothing.
     """
     jvm = spark._jvm
     root = jvm.org.apache.hadoop.fs.Path(path)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
 
-    def has_file(p) -> bool:
-        for st in fs.listStatus(p):
-            if _hidden(st.getPath().getName()):
-                continue
-            if not st.isDirectory() or has_file(st.getPath()):
-                return True
-        return False
+    def walk(statuses):
+        for st in statuses:
+            if st.isDirectory():
+                yield from walk(
+                    c for c in fs.listStatus(st.getPath())
+                    if not _hidden(c.getPath().getName())
+                )
+            else:
+                yield st.getPath().getName()
 
-    return bool(fs.exists(root)) and has_file(root)
+    yield from walk(fs.globStatus(root) or ())
+
+
+def sink_has_data(spark: SparkSession, path: str) -> bool:
+    """True when ``path`` holds at least one data file a Spark read would
+    scan.  A missing path, or one holding only markers or the
+    ``_temporary`` leftovers of a crashed first write, is absent.
+
+    Callers read an existing sink without a blanket ``except``: a
+    corrupt file or a schema mismatch in a sink that does exist raises
+    instead of passing for a first run.
+    """
+    return next(data_files(spark, path), None) is not None
 
 
 def sink_high_watermark(spark: SparkSession, blocks_path: str) -> int | None:

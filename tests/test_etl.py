@@ -72,6 +72,7 @@ def test_kill_between_sinks_then_resume_is_exactly_once(spark, chain, tmp_path, 
     bucket overwrite heals partial commits.
     """
     from etl_rust_spark.etl import writer as writer_mod
+    from etl_rust_spark.sources.checkpoint import sink_has_data
 
     # Uninterrupted reference run.
     ref_out = str(tmp_path / "ref")
@@ -92,7 +93,7 @@ def test_kill_between_sinks_then_resume_is_exactly_once(spark, chain, tmp_path, 
             run_range(spark, chain, 0, 30, out, bucket_size=10)
         # the kill really happened mid-batch: blocks (the checkpoint)
         # must NOT have committed
-        assert not (Path(out) / "blocks" / "_SUCCESS").exists()
+        assert not sink_has_data(spark, f"{out}/blocks")
         monkeypatch.setattr(writer_mod, "write_table", real_write_table)
 
         stats = run_range(spark, chain, 0, 30, out, resume=True, bucket_size=10)
@@ -889,6 +890,30 @@ def test_read_corpus_xz_jsonl(spark, tmp_path):
         spark, str(xpath), fmt="jsonl", lang_field=None, source_field=None
     )
     assert {r.doc_id for r in out2.collect()} == {1, 2}
+
+
+def test_read_corpus_xz_directory_routes_by_its_files(spark, tmp_path):
+    """A directory of .jsonl.xz shards takes the Python codec route like
+    a glob of them (Spark's reader would drop every line as a corrupt
+    record); a path mixing .xz with other codecs raises."""
+    import gzip
+    import lzma
+
+    from etl_rust_spark.etl.ingest import read_corpus
+
+    d = tmp_path / "xz"
+    d.mkdir()
+    for s in range(2):
+        lines = [f'{{"doc_id": {s * 10 + i}, "text": "doc {s} {i}"}}' for i in range(5)]
+        (d / f"part-{s}.jsonl.xz").write_bytes(lzma.compress(("\n".join(lines) + "\n").encode()))
+    kw = dict(fmt="jsonl", lang_field=None, source_field=None)
+    by_glob = sorted(map(tuple, read_corpus(spark, str(d / "*.jsonl.xz"), **kw).collect()))
+    by_dir = sorted(map(tuple, read_corpus(spark, str(d), **kw).collect()))
+    assert len(by_glob) == 10
+    assert by_dir == by_glob
+    (d / "part-2.jsonl.gz").write_bytes(gzip.compress(b'{"doc_id": 99, "text": "z"}\n'))
+    with pytest.raises(ValueError, match="mixes"):
+        read_corpus(spark, str(d), **kw)
 
 
 @_needs_zstd_cli

@@ -225,13 +225,9 @@ def main() -> None:
         "n_listed": len(ihit),
     }
     if "--spark" in sys.argv:
-        from pyspark.sql import SparkSession
+        from etl_rust_spark import get_spark
 
-        spark = (
-            SparkSession.builder.master("local[8]")
-            .config("spark.sql.shuffle.partitions", "8")
-            .getOrCreate()
-        )
+        spark = get_spark(app_name="metadata-scale", master="local[8]", shuffle_partitions=8)
         spark.sparkContext.setLogLevel("ERROR")
         # warm the JVM/session once so the A/B measures the plan, not
         # session start-up
