@@ -1,4 +1,5 @@
-"""Minimal Kafka wire-protocol producer (K-05 fallback) — stdlib only.
+"""Minimal Kafka wire-protocol producer (K-05 fallback) — stdlib plus
+pyarrow's native snappy, lz4 and zstd codecs.
 
 The reference's Kafka sink aggregates records into 1024-message batches
 and produces them with ``rskafka`` (src/output/apache_kafka.rs:31-115).
@@ -34,15 +35,23 @@ lifecycle matches the other transports: one client per partition via
 
 from __future__ import annotations
 
+import gzip
+import io
 import socket
 import struct
 import time
+import zlib
 from typing import Any
+
+import pyarrow as pa
 
 __all__ = [
     "KafkaWireError",
     "KafkaWireClient",
     "kafka_wire_client_factory",
+    "CODECS",
+    "compress",
+    "decompress",
     "crc32c",
     "encode_varint",
     "decode_varint",
@@ -116,49 +125,51 @@ def decode_varint(data: bytes, pos: int) -> tuple[int, int]:
 
 
 # --------------------------------------------------------------------------
-# Snappy (raw block format, public spec: format_description.txt) —
-# Kafka codec 2.  Decode implements the FULL element grammar (literal +
-# 1/2/4-byte-offset copies, LE varint preamble) plus transparent unwrap
-# of the historical xerial/java framing; encode emits the spec's
-# literals-only form (a valid stream any snappy reader inflates — the
-# compression win stays with gzip, interop is what this buys).
+# Records-section codecs, keyed by the attributes' codec id (bits 0-2).
+# gzip is stdlib (``mtime=0`` keeps the bytes deterministic); snappy
+# (raw block format), lz4 (frame format) and zstd are pyarrow's native
+# codecs.  Decoding is bounded by ``max_out``: the framed streams are
+# read in 64 KiB chunks and stop once past it (a pyarrow ``read(n)``
+# that raises keeps n bytes of address space, so never read the bound
+# in one call), and raw snappy's length preamble is checked before
+# pyarrow allocates.
 # --------------------------------------------------------------------------
 
+CODECS = {1: "gzip", 2: "snappy", 3: "lz4", 4: "zstd"}
+_CODEC_IDS = {name: cid for cid, name in CODECS.items()}
 _XERIAL_MAGIC = b"\x82SNAPPY\x00"
+_CHUNK = 1 << 16
 
 
-def snappy_compress(data: bytes) -> bytes:
-    out = bytearray()
-    n = len(data)
-    while True:  # unsigned LE base-128 preamble
-        b = n & 0x7F
-        n >>= 7
-        out.append(b | 0x80 if n else b)
-        if not n:
-            break
-    pos = 0
-    while pos < len(data):
-        chunk = data[pos : pos + 65536]
-        ln = len(chunk) - 1
-        if ln < 60:
-            out.append(ln << 2)
-        elif ln < 256:
-            out += bytes((60 << 2, ln))
-        else:
-            out += bytes((61 << 2, ln & 0xFF, ln >> 8))
-        out += chunk
-        pos += len(chunk)
-    return bytes(out)
+def compress(codec: str, data: bytes) -> bytes:
+    """``data`` as one ``codec`` stream (a name in :data:`CODECS`)."""
+    if codec == "gzip":
+        return gzip.compress(data, mtime=0)
+    return pa.Codec(codec).compress(data, asbytes=True)
 
 
-def snappy_decompress(data: bytes) -> bytes:
+def decompress(codec: str, data: bytes, max_out: int = 1 << 27) -> bytes:
+    """Inflate one ``codec`` stream of at most ``max_out`` bytes.
+    Corrupt, truncated or oversized input raises :class:`KafkaWireError`."""
     try:
-        return _snappy_decompress(data)
-    except (IndexError, struct.error) as exc:
-        raise KafkaWireError(f"corrupt snappy stream: {exc!r}") from exc
+        if codec == "snappy":
+            return _inflate_snappy(data, max_out)
+        if codec == "gzip":
+            stream = gzip.GzipFile(fileobj=io.BytesIO(data))
+        else:
+            stream = pa.CompressedInputStream(pa.BufferReader(data), codec)
+        out = bytearray()
+        with stream:
+            while chunk := stream.read(_CHUNK):
+                out += chunk
+                if len(out) > max_out:
+                    raise KafkaWireError(f"{codec} stream inflates past {max_out} bytes")
+        return bytes(out)
+    except (OSError, EOFError, IndexError, struct.error, zlib.error, pa.ArrowInvalid) as exc:
+        raise KafkaWireError(f"bad {codec} records section: {exc}") from exc
 
 
-def _snappy_decompress(data: bytes) -> bytes:
+def _inflate_snappy(data: bytes, max_out: int) -> bytes:
     if data[: len(_XERIAL_MAGIC)] == _XERIAL_MAGIC:
         # xerial framing: 8-byte magic, two int32 versions, then
         # [int32 block length, raw-snappy block]...
@@ -169,234 +180,22 @@ def _snappy_decompress(data: bytes) -> bytes:
             pos += 4
             if blen < 0 or pos + blen > len(data):
                 raise KafkaWireError("truncated xerial snappy block")
-            out += _snappy_decompress(data[pos : pos + blen])
+            out += _inflate_snappy(data[pos : pos + blen], max_out - len(out))
             pos += blen
         return bytes(out)
-    total, shift, pos = 0, 0, 0
-    while True:
+    n, shift, pos = 0, 0, 0
+    while True:  # unsigned LE base-128 length preamble
         b = data[pos]
         pos += 1
-        total |= (b & 0x7F) << shift
+        n |= (b & 0x7F) << shift
         if not b & 0x80:
             break
         shift += 7
-        if shift > 35:
+        if shift > 28:
             raise KafkaWireError("bad snappy length preamble")
-    out = bytearray()
-    while pos < len(data):
-        tag = data[pos]
-        pos += 1
-        kind = tag & 0x03
-        if kind == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:
-                nbytes = ln - 59
-                ln = int.from_bytes(data[pos : pos + nbytes], "little")
-                if len(data[pos : pos + nbytes]) < nbytes:
-                    raise KafkaWireError("truncated snappy literal length")
-                pos += nbytes
-            ln += 1
-            lit = data[pos : pos + ln]
-            if len(lit) < ln:
-                raise KafkaWireError("truncated snappy literal")
-            out += lit
-            pos += ln
-        else:
-            if kind == 1:  # copy, 3-bit length, 11-bit offset
-                ln = ((tag >> 2) & 0x07) + 4
-                off = ((tag >> 5) << 8) | data[pos]
-                pos += 1
-            elif kind == 2:  # copy, 2-byte LE offset
-                ln = (tag >> 2) + 1
-                off = int.from_bytes(data[pos : pos + 2], "little")
-                pos += 2
-            else:  # copy, 4-byte LE offset
-                ln = (tag >> 2) + 1
-                off = int.from_bytes(data[pos : pos + 4], "little")
-                pos += 4
-            if off == 0 or off > len(out):
-                raise KafkaWireError("snappy copy offset out of range")
-            for _ in range(ln):  # overlapping copies are the RLE trick
-                out.append(out[-off])
-    if len(out) != total:
-        raise KafkaWireError(
-            f"snappy length mismatch: preamble {total}, inflated {len(out)}"
-        )
-    return bytes(out)
-
-
-# --------------------------------------------------------------------------
-# LZ4 frame format (public spec lz4_Frame_format.md) — Kafka codec 3.
-# Decode: full frame walk (FLG/BD/HC header with xxhash32 verification,
-# compressed + stored blocks, optional block/content checksums) over
-# the full block-sequence grammar.  Encode: spec-valid frame of STORED
-# blocks (highest-bit size flag) — same interop-over-ratio trade as the
-# snappy encoder.  xxhash32 is implemented from its public spec.
-# --------------------------------------------------------------------------
-
-_LZ4_MAGIC = 0x184D2204
-_XXH_P1, _XXH_P2, _XXH_P3, _XXH_P4, _XXH_P5 = (
-    2654435761, 2246822519, 3266489917, 668265263, 374761393,
-)
-_M32 = 0xFFFFFFFF
-
-
-def _rotl32(x: int, r: int) -> int:
-    return ((x << r) | (x >> (32 - r))) & _M32
-
-
-def xxhash32(data: bytes, seed: int = 0) -> int:
-    n = len(data)
-    pos = 0
-    if n >= 16:
-        v1 = (seed + _XXH_P1 + _XXH_P2) & _M32
-        v2 = (seed + _XXH_P2) & _M32
-        v3 = seed & _M32
-        v4 = (seed - _XXH_P1) & _M32
-        while pos + 16 <= n:
-            for i, v in enumerate((v1, v2, v3, v4)):
-                lane = int.from_bytes(data[pos + 4 * i : pos + 4 * i + 4], "little")
-                v = (v + lane * _XXH_P2) & _M32
-                v = (_rotl32(v, 13) * _XXH_P1) & _M32
-                if i == 0:
-                    v1 = v
-                elif i == 1:
-                    v2 = v
-                elif i == 2:
-                    v3 = v
-                else:
-                    v4 = v
-            pos += 16
-        h = (_rotl32(v1, 1) + _rotl32(v2, 7) + _rotl32(v3, 12) + _rotl32(v4, 18)) & _M32
-    else:
-        h = (seed + _XXH_P5) & _M32
-    h = (h + n) & _M32
-    while pos + 4 <= n:
-        h = (h + int.from_bytes(data[pos : pos + 4], "little") * _XXH_P3) & _M32
-        h = (_rotl32(h, 17) * _XXH_P4) & _M32
-        pos += 4
-    while pos < n:
-        h = (h + data[pos] * _XXH_P5) & _M32
-        h = (_rotl32(h, 11) * _XXH_P1) & _M32
-        pos += 1
-    h ^= h >> 15
-    h = (h * _XXH_P2) & _M32
-    h ^= h >> 13
-    h = (h * _XXH_P3) & _M32
-    h ^= h >> 16
-    return h
-
-
-def _lz4_block_decompress(data: bytes, max_out: int) -> bytes:
-    out = bytearray()
-    pos = 0
-    while pos < len(data):
-        token = data[pos]
-        pos += 1
-        lit = token >> 4
-        if lit == 15:
-            while True:
-                b = data[pos]
-                pos += 1
-                lit += b
-                if b != 255:
-                    break
-        chunk = data[pos : pos + lit]
-        if len(chunk) < lit:
-            raise KafkaWireError("truncated lz4 literals")
-        out += chunk
-        pos += lit
-        if pos >= len(data):
-            break  # last sequence: literals only
-        off = int.from_bytes(data[pos : pos + 2], "little")
-        pos += 2
-        if off == 0 or off > len(out):
-            raise KafkaWireError("lz4 match offset out of range")
-        mlen = token & 0x0F
-        if mlen == 15:
-            while True:
-                b = data[pos]
-                pos += 1
-                mlen += b
-                if b != 255:
-                    break
-        mlen += 4
-        for _ in range(mlen):
-            out.append(out[-off])
-        if len(out) > max_out:
-            raise KafkaWireError("lz4 output exceeds declared bound")
-    return bytes(out)
-
-
-def lz4_decompress(data: bytes, max_out: int = 1 << 27) -> bytes:
-    try:
-        return _lz4_decompress(data, max_out)
-    except (IndexError, struct.error) as exc:
-        raise KafkaWireError(f"corrupt lz4 frame: {exc!r}") from exc
-
-
-def _lz4_decompress(data: bytes, max_out: int) -> bytes:
-    if int.from_bytes(data[:4], "little") != _LZ4_MAGIC:
-        raise KafkaWireError("bad lz4 frame magic")
-    flg, bd = data[4], data[5]
-    if (flg >> 6) != 0b01:
-        raise KafkaWireError("unsupported lz4 frame version")
-    b_checksum = bool(flg & 0x10)
-    c_size = bool(flg & 0x08)
-    c_checksum = bool(flg & 0x04)
-    pos = 6
-    hdr = data[4:6]
-    if c_size:
-        hdr += data[pos : pos + 8]
-        pos += 8
-    hc = data[pos]
-    pos += 1
-    if ((xxhash32(hdr) >> 8) & 0xFF) != hc:
-        raise KafkaWireError("lz4 frame header checksum mismatch")
-    out = bytearray()
-    while True:
-        if pos + 4 > len(data):
-            raise KafkaWireError("lz4 frame missing EndMark")
-        (bsize,) = struct.unpack_from("<I", data, pos)
-        pos += 4
-        if bsize == 0:
-            break
-        stored = bool(bsize & 0x80000000)
-        bsize &= 0x7FFFFFFF
-        block = data[pos : pos + bsize]
-        if len(block) < bsize:
-            raise KafkaWireError("truncated lz4 block")
-        pos += bsize
-        if b_checksum:
-            (bsum,) = struct.unpack_from("<I", data, pos)
-            pos += 4
-            if xxhash32(block) != bsum:
-                raise KafkaWireError("lz4 block checksum mismatch")
-        out += block if stored else _lz4_block_decompress(block, max_out - len(out))
-        if len(out) > max_out:
-            raise KafkaWireError("lz4 output exceeds bound")
-    if c_checksum:
-        (csum,) = struct.unpack_from("<I", data, pos)
-        if xxhash32(bytes(out)) != csum:
-            raise KafkaWireError("lz4 content checksum mismatch")
-    return bytes(out)
-
-
-def lz4_compress(data: bytes) -> bytes:
-    """Spec-valid frame of STORED blocks (block-independent, content
-    checksum on — what Kafka's lz4 consumers verify)."""
-    flg = (0b01 << 6) | 0x20 | 0x04  # version, B.Indep, C.Checksum
-    bd = 0x70  # 4 MB max block size
-    hdr = bytes((flg, bd))
-    out = bytearray(struct.pack("<I", _LZ4_MAGIC) + hdr)
-    out.append((xxhash32(hdr) >> 8) & 0xFF)
-    for pos in range(0, len(data), 1 << 22):
-        block = data[pos : pos + (1 << 22)]
-        out += struct.pack("<I", len(block) | 0x80000000)
-        out += block
-    out += struct.pack("<I", 0)  # EndMark
-    out += struct.pack("<I", xxhash32(data))
-    return bytes(out)
+    if n > max_out:
+        raise KafkaWireError(f"snappy preamble declares {n} bytes, past {max_out}")
+    return pa.Codec("snappy").decompress(data, decompressed_size=n, asbytes=True)
 
 
 # --------------------------------------------------------------------------
@@ -419,15 +218,13 @@ def encode_record_batch(
     first/max timestamp int64, producerId/Epoch/baseSequence (-1:
     idempotence off), record count, then zigzag-varint records.
 
-    ``compression='gzip'`` (codec 1), ``'zstd'`` (codec 4, RFC 8878
-    frame via etl/zstdcodec.py) or ``'snappy'`` (codec 2, raw
-    block format) compresses the RECORDS section only — the 40-byte
-    batch-body prefix stays clear so brokers can route without
-    inflating; the record COUNT stays the logical count.  None =
-    codec 0."""
+    ``compression`` names a codec in :data:`CODECS` (gzip, snappy,
+    lz4 or zstd; None = codec 0) and compresses the RECORDS section
+    only — the 40-byte batch-body prefix stays clear so brokers can
+    route without inflating; the record COUNT stays the logical count."""
     if not values:
         raise KafkaWireError("empty record batch")
-    if compression not in (None, "gzip", "snappy", "lz4", "zstd"):
+    if compression is not None and compression not in _CODEC_IDS:
         raise KafkaWireError(
             f"unsupported compression {compression!r} (gzip | snappy | lz4 | zstd)"
         )
@@ -448,23 +245,9 @@ def encode_record_batch(
         records += encode_varint(len(body)) + body
     attrs = 0
     rec_bytes = bytes(records)
-    if compression == "gzip":
-        import gzip as _gzip
-
-        attrs = 1
-        # mtime=0: byte-deterministic output (golden tests depend on it)
-        rec_bytes = _gzip.compress(rec_bytes, mtime=0)
-    elif compression == "snappy":
-        attrs = 2
-        rec_bytes = snappy_compress(rec_bytes)
-    elif compression == "lz4":
-        attrs = 3
-        rec_bytes = lz4_compress(rec_bytes)
-    elif compression == "zstd":
-        from etl_rust_spark.etl.zstdcodec import zstd_compress
-
-        attrs = 4
-        rec_bytes = zstd_compress(rec_bytes)
+    if compression is not None:
+        attrs = _CODEC_IDS[compression]
+        rec_bytes = compress(compression, rec_bytes)
     after_crc = (
         struct.pack(">hiqqqhii", attrs, len(values) - 1, ts, ts, -1, -1, -1, len(values))
         + rec_bytes
@@ -526,25 +309,8 @@ def _decode_record_batch(data: bytes) -> list[tuple[int, bytes | None, bytes]]:
         )
         codec = attrs & 0x07
         p = 40  # fixed batch-body prefix (2+4+8+8+8+2+4+4)
-        if codec == 1:  # gzip: the records section is one deflate stream
-            import gzip as _gzip
-            import zlib as _zlib
-
-            try:
-                body = body[:40] + _gzip.decompress(body[40:])
-            except (OSError, EOFError, _zlib.error) as exc:
-                raise KafkaWireError(f"bad gzip records section: {exc!r}") from exc
-        elif codec == 2:  # snappy (raw or xerial-framed)
-            body = body[:40] + snappy_decompress(body[40:])
-        elif codec == 3:  # lz4 frame
-            body = body[:40] + lz4_decompress(body[40:])
-        elif codec == 4:  # zstd frame (RFC 8878, full decoder)
-            from etl_rust_spark.etl.zstdcodec import ZstdError, zstd_decompress
-
-            try:
-                body = body[:40] + zstd_decompress(body[40:])
-            except ZstdError as exc:
-                raise KafkaWireError(f"bad zstd records section: {exc}") from exc
+        if codec in CODECS:
+            body = body[:40] + decompress(CODECS[codec], body[40:])
         elif codec:
             raise KafkaWireError(f"unsupported compression codec {codec}")
         for _ in range(n):

@@ -40,7 +40,7 @@ from pathlib import Path
 
 import pyspark
 from py4j.java_gateway import JavaClass
-from pyspark import SparkContext
+from pyspark import SparkConf, SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
@@ -149,6 +149,18 @@ def _session_confs(
     return confs
 
 
+def _launch_master(confs: dict[str, str]) -> str | None:
+    """The master spark-submit or ``PYSPARK_SUBMIT_ARGS`` gave the driver
+    JVM, or None when it was given none.  Starts that JVM first, with
+    ``confs``, when this process has none yet: the launch-time confs
+    (driver memory and class path) only take effect then.  spark-submit
+    reports its own default, ``local[*]``, when no master is given, so
+    that value counts as none."""
+    SparkContext._ensure_initialized(conf=SparkConf().setAll(confs.items()))
+    master = SparkConf().get("spark.master", None)
+    return None if master == "local[*]" else master
+
+
 def get_spark(
     app_name: str = "etl-rust-spark",
     master: str | None = None,
@@ -157,14 +169,21 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (all cores if the
-    env var is unset).  On a cluster, pass ``master=None`` with an external
-    spark-submit master and these confs still apply.
+    ``master=None`` takes the master given at launch (spark-submit's
+    ``--master``, also through ``PYSPARK_SUBMIT_ARGS``) and falls back
+    to ``local[$SPARK_GRAFT_CPUS]`` (all cores if the env var is unset)
+    when there is none.  The engine confs apply either way.
     """
     cpus = _cpus()
-    master = master or f"local[{cpus}]"
+    partitions = shuffle_partitions or cpus
+    if master is None:
+        # A JVM started here gets a local master's class path, but the
+        # filesystem class is only chosen once the master is known.
+        launch = _session_confs("local", partitions, extra_confs)
+        launch.pop("spark.hadoop.fs.file.impl", None)
+        master = _launch_master(launch) or f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
-    confs = _session_confs(master, shuffle_partitions or cpus, extra_confs)
+    confs = _session_confs(master, partitions, extra_confs)
     for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

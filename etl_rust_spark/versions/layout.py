@@ -249,7 +249,7 @@ def _bucket_seg_of(t: dict, val) -> str | None:
     8-byte LE, int → 4-byte LE, string → UTF-8."""
     import struct
 
-    from etl_rust_spark.etl.zstdcodec import xxhash64
+    from etl_rust_spark.functions.hashing import xxhash64
 
     st = t.get("src_type")
     if isinstance(val, bool):

@@ -15,6 +15,7 @@ deep before failing).
 from __future__ import annotations
 
 import struct
+from functools import partial
 
 import numpy as np
 import pytest
@@ -23,7 +24,9 @@ from hypothesis import strategies as st
 
 from etl_rust_spark.etl.kafka_wire import (
     KafkaWireError,
+    compress,
     decode_record_batch,
+    decompress,
     encode_record_batch,
 )
 from etl_rust_spark.etl.warc import iter_warc_records
@@ -149,32 +152,25 @@ def test_adpcm_garbage_after_fmt(tail):
 @settings(**_SETTINGS)
 @given(st.binary(max_size=400))
 def test_snappy_garbage_never_crashes(tail):
-    from etl_rust_spark.etl.kafka_wire import snappy_decompress
-
-    _assert_contract(snappy_decompress, tail)
-    _assert_contract(snappy_decompress, b"\x82SNAPPY\x00" + tail)
+    snappy = partial(decompress, "snappy")
+    _assert_contract(snappy, tail)
+    _assert_contract(snappy, b"\x82SNAPPY\x00" + tail)
 
 
 @settings(**_SETTINGS)
 @given(st.binary(max_size=400))
 def test_lz4_garbage_never_crashes(tail):
-    import struct as _struct
-
-    from etl_rust_spark.etl.kafka_wire import lz4_decompress
-
-    _assert_contract(lz4_decompress, tail)
-    _assert_contract(lz4_decompress, _struct.pack("<I", 0x184D2204) + tail)
+    lz4 = partial(decompress, "lz4")
+    _assert_contract(lz4, tail)
+    _assert_contract(lz4, struct.pack("<I", 0x184D2204) + tail)
 
 
 @settings(**_SETTINGS)
 @given(st.binary(max_size=400))
 def test_zstd_garbage_never_crashes(tail):
-    import struct as _struct
-
-    from etl_rust_spark.etl.zstdcodec import zstd_decompress
-
-    _assert_contract(zstd_decompress, tail)
-    _assert_contract(zstd_decompress, _struct.pack("<I", 0xFD2FB528) + tail)
+    zstd = partial(decompress, "zstd")
+    _assert_contract(zstd, tail)
+    _assert_contract(zstd, struct.pack("<I", 0xFD2FB528) + tail)
 
 
 @settings(**_SETTINGS)
@@ -200,9 +196,6 @@ def test_tiff_garbage_after_magic(tail):
 # ---------------------------------------------------------------------------
 
 def _registry_payloads():
-    from etl_rust_spark.etl.kafka_wire import lz4_compress, snappy_compress
-    from etl_rust_spark.etl.zstdcodec import zstd_compress
-
     rng = np.random.default_rng(7)
     img = rng.integers(0, 256, (9, 11, 3), dtype=np.uint8)
     samples = 0.3 * np.sin(np.arange(500) / 7.0)
@@ -237,28 +230,11 @@ def _registry_payloads():
         ("wav_ulaw", mc.encode_g711_wav(samples, 8000, "u"), mc.decode_wav),
         ("wav_alaw", mc.encode_g711_wav(samples, 8000, "a"), mc.decode_wav),
         ("avi", mc.encode_avi(frames), mc.decode_avi),
-        ("snappy", snappy_compress(blob), snappy_decompress_contract),
-        ("lz4", lz4_compress(blob), lz4_decompress_contract),
-        ("zstd", zstd_compress(blob), zstd_decompress_contract),
+        *[
+            (codec, compress(codec, blob), partial(decompress, codec))
+            for codec in ("snappy", "lz4", "zstd")
+        ],
     ]
-
-
-def snappy_decompress_contract(data):
-    from etl_rust_spark.etl.kafka_wire import snappy_decompress
-
-    return snappy_decompress(data)
-
-
-def lz4_decompress_contract(data):
-    from etl_rust_spark.etl.kafka_wire import lz4_decompress
-
-    return lz4_decompress(data)
-
-
-def zstd_decompress_contract(data):
-    from etl_rust_spark.etl.zstdcodec import zstd_decompress
-
-    return zstd_decompress(data)
 
 
 _REGISTRY = _registry_payloads()

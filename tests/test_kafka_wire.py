@@ -10,6 +10,7 @@ record batches it stores are the exact bytes a real broker would store.
 
 from __future__ import annotations
 
+import shutil
 import socket
 import struct
 import threading
@@ -551,41 +552,42 @@ def test_snappy_hand_golden_with_copies():
     preamble 12, literal 'ab' (tag 0x04), then a 1-byte-offset copy of
     length 10 at offset 2 (tag (10-4)<<2 | 01 = 0x19, offset byte 0x02)
     — the overlapping-copy RLE trick expands 'ab' to 12 bytes."""
-    from etl_rust_spark.etl.kafka_wire import snappy_decompress
+    from etl_rust_spark.etl.kafka_wire import decompress
 
-    assert snappy_decompress(b"\x0c" + b"\x04ab" + b"\x19\x02") == b"ab" * 6
+    assert decompress("snappy", b"\x0c" + b"\x04ab" + b"\x19\x02") == b"ab" * 6
     # 2-byte-offset copy form: literal 'abcd', copy len 4 off 4
     stream = b"\x08" + b"\x0cabcd" + bytes([((4 - 1) << 2) | 2, 4, 0])
-    assert snappy_decompress(stream) == b"abcdabcd"
+    assert decompress("snappy", stream) == b"abcdabcd"
 
 
 def test_snappy_roundtrip_and_xerial_unwrap():
     import struct
 
-    from etl_rust_spark.etl.kafka_wire import snappy_compress, snappy_decompress
+    from etl_rust_spark.etl.kafka_wire import compress, decompress
 
     for payload in (b"", b"x", b"hello world" * 1000, bytes(range(256)) * 300):
-        assert snappy_decompress(snappy_compress(payload)) == payload
+        assert decompress("snappy", compress("snappy", payload)) == payload
     # xerial/java framing: magic + versions + [len, block]...
-    block = snappy_compress(b"framed payload")
+    block = compress("snappy", b"framed payload")
     framed = (b"\x82SNAPPY\x00" + struct.pack(">ii", 1, 1)
               + struct.pack(">i", len(block)) + block)
-    assert snappy_decompress(framed) == b"framed payload"
+    assert decompress("snappy", framed) == b"framed payload"
 
 
 def test_snappy_corrupt_raises_wire_error():
     import pytest as _pytest
 
-    from etl_rust_spark.etl.kafka_wire import KafkaWireError, snappy_decompress
+    from etl_rust_spark.etl.kafka_wire import KafkaWireError, decompress
 
     for bad in (
         b"\x0c\x19\x02",            # copy before any output (offset > len(out))
         b"\xff\xff\xff\xff\xff\xff",  # runaway preamble
         b"\x0c\x04ab",              # inflates to 2, preamble says 12
         b"\x08\xfcabcd",            # literal length runs past end
+        b"\x80\x80\x80\x80\x04ab",  # preamble declares 1 GiB, past the bound
     ):
         with _pytest.raises(KafkaWireError):
-            snappy_decompress(bad)
+            decompress("snappy", bad)
 
 
 def test_record_batch_snappy_roundtrip():
@@ -597,64 +599,54 @@ def test_record_batch_snappy_roundtrip():
     assert decode_record_batch(comp) == decode_record_batch(plain)
     (attrs,) = struct.unpack_from(">h", comp, 21)
     assert attrs & 0x07 == 2
-
-
-def test_xxhash32_known_vectors():
-    from etl_rust_spark.etl.kafka_wire import xxhash32
-
-    assert xxhash32(b"") == 0x02CC5D05
-    assert xxhash32(b"a") == 0x550D7456
-    assert xxhash32(b"abc") == 0x32D153FF
-    # >=16-byte path (the four-lane loop)
-    assert xxhash32(b"Hello, world! Hello!") == xxhash32(b"Hello, world! Hello!")
-    assert xxhash32(b"x" * 64) != xxhash32(b"x" * 63)
+    assert len(comp) < len(plain)  # the runs compress
 
 
 def test_lz4_hand_golden_compressed_block():
-    """Hand-built frame holding one COMPRESSED block: token 0x40 =
-    4 literals 'abcd', then match offset 4 length 0+4 -> 'abcdabcd'."""
+    """Hand-built frame holding one COMPRESSED block, liblz4's encoding
+    of b"abcd" * 10: token 0x4f = 4 literals 'abcd' + match length
+    15+12+4 = 31 at offset 4, then token 0x50 = the 5 trailing literals
+    'dabcd' the block spec requires (a block must end in literals)."""
     import struct
 
-    from etl_rust_spark.etl.kafka_wire import lz4_decompress, xxhash32
+    from etl_rust_spark.etl.kafka_wire import decompress
 
-    block = b"\x40abcd" + b"\x04\x00"
-    hdr = bytes((0x60, 0x70))  # version, B.Indep; 4MB blocks; no checksums
+    block = bytes.fromhex("4f6162636404000c506461626364")
     frame = (
-        struct.pack("<I", 0x184D2204) + hdr
-        + bytes(((xxhash32(hdr) >> 8) & 0xFF,))
+        struct.pack("<I", 0x184D2204)
+        + bytes((0x60, 0x70))  # version, B.Indep; 4MB blocks; no checksums
+        + bytes((0x73,))  # header checksum: (xxh32(b"\x60\x70") >> 8) & 0xFF
         + struct.pack("<I", len(block)) + block
         + struct.pack("<I", 0)
     )
-    assert lz4_decompress(frame) == b"abcdabcd"
+    assert decompress("lz4", frame) == b"abcd" * 10
 
 
 def test_lz4_roundtrip_and_corrupt():
     import pytest as _pytest
     import struct
 
-    from etl_rust_spark.etl.kafka_wire import (
-        KafkaWireError,
-        lz4_compress,
-        lz4_decompress,
-    )
+    from etl_rust_spark.etl.kafka_wire import KafkaWireError, compress, decompress
 
     for payload in (b"", b"z", b"payload " * 4096):
-        assert lz4_decompress(lz4_compress(payload)) == payload
-    good = lz4_compress(b"hello world")
-    with _pytest.raises(KafkaWireError, match="magic"):
-        lz4_decompress(b"\x00\x00\x00\x00" + good[4:])
+        assert decompress("lz4", compress("lz4", payload)) == payload
+    # b"hello world" as one STORED block with a content checksum
+    good = bytes.fromhex("04224d186470b90b00008068656c6c6f20776f726c64000000002266bbce")
+    assert decompress("lz4", good) == b"hello world"
+    with _pytest.raises(KafkaWireError, match="frameType_unknown"):
+        decompress("lz4", b"\x00\x00\x00\x00" + good[4:])
     bad_hc = bytearray(good)
     bad_hc[6] ^= 0xFF
-    with _pytest.raises(KafkaWireError, match="header checksum"):
-        lz4_decompress(bytes(bad_hc))
+    with _pytest.raises(KafkaWireError, match="headerChecksum_invalid"):
+        decompress("lz4", bytes(bad_hc))
     bad_content = bytearray(good)
     struct.pack_into("<I", bad_content, len(bad_content) - 4, 0)
-    with _pytest.raises(KafkaWireError, match="content checksum"):
-        lz4_decompress(bytes(bad_content))
-    with _pytest.raises(KafkaWireError, match="EndMark"):
-        lz4_decompress(good[:-8])  # exactly EndMark + content checksum gone
-    with _pytest.raises(KafkaWireError, match="truncated lz4 block"):
-        lz4_decompress(good[:-9])  # cut reaches into the block itself
+    with _pytest.raises(KafkaWireError, match="contentChecksum_invalid"):
+        decompress("lz4", bytes(bad_content))
+    with _pytest.raises(KafkaWireError, match="Truncated"):
+        decompress("lz4", good[:-8])  # exactly EndMark + content checksum gone
+    with _pytest.raises(KafkaWireError, match="Truncated"):
+        decompress("lz4", good[:-9])  # cut reaches into the block itself
 
 
 def test_record_batch_lz4_roundtrip():
@@ -666,6 +658,75 @@ def test_record_batch_lz4_roundtrip():
     assert decode_record_batch(comp) == decode_record_batch(plain)
     (attrs,) = struct.unpack_from(">h", comp, 21)
     assert attrs & 0x07 == 3
+    assert len(comp) < len(plain)  # the runs compress
+
+
+_LZ4_CLI = shutil.which("lz4")
+needs_lz4_cli = pytest.mark.skipif(_LZ4_CLI is None, reason="no lz4 CLI")
+
+
+@needs_lz4_cli
+def test_lz4_cli_interop():
+    """Frames from the canonical lz4 CLI decode, linked blocks (-BD)
+    included, and ``lz4 -d`` inflates this module's frames.  64 KiB
+    blocks (-B4) make every input below several blocks long."""
+    import random
+    import subprocess
+
+    from etl_rust_spark.etl.kafka_wire import compress, decompress
+
+    rng = random.Random(7)
+    words = [rng.randbytes(rng.randrange(1, 12)) for _ in range(300)]
+    cases = {
+        "text": b"the quick brown fox jumps over the lazy dog. " * 5000,
+        "words": b" ".join(rng.choice(words) for _ in range(40000)),
+        "random": rng.randbytes(70000),
+    }
+    for args in (["-B4"], ["-B4", "-BD"], ["-B4", "-BD", "--content-size", "-BX"]):
+        for name, data in cases.items():
+            p = subprocess.run(["lz4", "-c", *args], input=data, capture_output=True)
+            assert p.returncode == 0, p.stderr[:300]
+            assert decompress("lz4", p.stdout) == data, (args, name)
+    for name, data in cases.items():
+        p = subprocess.run(
+            ["lz4", "-d", "-c"], input=compress("lz4", data), capture_output=True
+        )
+        assert p.returncode == 0, (name, p.stderr[:300])
+        assert p.stdout == data, name
+
+
+def test_corrupt_frames_keep_address_space_flat():
+    """Decoding corrupt lz4/zstd frames must not reserve the output
+    bound per call: pyarrow keeps the size of a ``read(n)`` that raises
+    as address space, so a bounded read of ``max_out + 1`` bytes would
+    grow the process by ~128 MiB per corrupt frame."""
+    import os
+
+    from etl_rust_spark.etl.kafka_wire import compress, decompress
+
+    status = "/proc/self/status"
+    if not os.path.exists(status):
+        pytest.skip("no /proc/self/status")
+
+    def vm_size() -> int:
+        with open(status) as f:
+            line = next(ln for ln in f if ln.startswith("VmSize:"))
+        return int(line.split()[1]) * 1024
+
+    frames = []
+    for codec in ("lz4", "zstd"):
+        good = compress(codec, b"payload %d " * 2000)
+        bad = bytearray(good)
+        bad[len(bad) // 2] ^= 0xFF
+        frames += [(codec, bytes(bad)), (codec, good[: len(good) // 2])]
+    before = vm_size()
+    for i in range(200):
+        codec, frame = frames[i % len(frames)]
+        try:
+            decompress(codec, frame)
+        except KafkaWireError:
+            pass
+    assert vm_size() - before < 1 << 30
 
 
 def test_client_compressed_produce_fetch_roundtrip():

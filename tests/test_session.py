@@ -113,3 +113,37 @@ def test_confs_local_master_only_and_keep_class_path(spark, monkeypatch):
     remote = session._session_confs("spark://host:7077", 2, None)
     assert "spark.hadoop.fs.file.impl" not in remote
     assert "spark.driver.extraClassPath" not in remote
+
+
+def test_master_none_keeps_launch_master(tmp_path):
+    """``get_spark()`` takes the master ``PYSPARK_SUBMIT_ARGS`` gives the
+    driver JVM instead of overriding it with ``local[$SPARK_GRAFT_CPUS]``,
+    and still picks the java.nio filesystem for that local master."""
+    import subprocess
+    import sys
+
+    script = (
+        "from etl_rust_spark.session import get_spark\n"
+        "spark = get_spark()\n"
+        "jvm = spark._jvm\n"
+        "fs = jvm.org.apache.hadoop.fs.Path('file:///').getFileSystem("
+        "spark._jsc.hadoopConfiguration())\n"
+        "print(spark.sparkContext.master, fs.getClass().getName())\n"
+        "spark.stop()\n"
+    )
+    env = dict(
+        os.environ,
+        PYSPARK_SUBMIT_ARGS="--master local[2] pyspark-shell",
+        SPARK_GRAFT_CPUS="3",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        PYTHONPATH=str(Path(__file__).resolve().parents[1]),
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script], env=env, cwd=tmp_path,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    master, fs_class = out.stdout.split()[-2:]
+    assert master == "local[2]"
+    if shutil.which("javac"):
+        assert fs_class == session.LOCAL_FS_CLASS

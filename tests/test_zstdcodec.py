@@ -1,4 +1,5 @@
-"""Zstandard codec (etl/zstdcodec.py, RFC 8878) tests.
+"""Zstandard codec tests (Kafka codec 4, pyarrow's libzstd behind
+``kafka_wire.compress``/``decompress``).
 
 Verification strategy — three independent layers:
 
@@ -11,11 +12,11 @@ Verification strategy — three independent layers:
    the canonical implementation at levels -1/-3/-19 over adversarial
    inputs (empty, RLE runs, LZ-rich chunk repeats, random
    incompressible, >128 KiB multi-block, --no-check, --long window),
-   plus the reverse direction — this module's raw/RLE-block encoder
-   must be decodable by ``zstd -d``.
+   plus the reverse direction — the encoder's frames must be
+   decodable by ``zstd -d``.
 3. PROPERTY/CONTRACT: own-encoder round-trips, concatenated + skippable
-   frames, corrupt-input fuzz under the uniform ValueError contract
-   (ZstdError subclasses ValueError; never a bare IndexError).
+   frames, corrupt-input fuzz under the wire module's contract (every
+   failure is a KafkaWireError; never a bare IndexError or OSError).
 """
 
 from __future__ import annotations
@@ -29,12 +30,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from etl_rust_spark.etl.zstdcodec import (
-    ZstdError,
-    xxhash64,
-    zstd_compress,
-    zstd_decompress,
-)
+from etl_rust_spark.etl.kafka_wire import KafkaWireError, compress, decompress
+from etl_rust_spark.functions.hashing import xxhash64
 
 _ZSTD_CLI = shutil.which("zstd")
 
@@ -55,43 +52,43 @@ def test_xxhash64_known_vectors():
 
 
 def test_frozen_golden_frame_decodes():
-    assert zstd_decompress(_GOLDEN1_FRAME) == _GOLDEN1_PLAIN
+    assert decompress("zstd", _GOLDEN1_FRAME) == _GOLDEN1_PLAIN
 
 
 def test_frozen_golden_checksum_detects_flip():
     bad = bytearray(_GOLDEN1_FRAME)
     bad[-6] ^= 0x40  # inside the entropy payload; checksum must catch it
-    with pytest.raises(ZstdError):
-        zstd_decompress(bytes(bad))
+    with pytest.raises(KafkaWireError):
+        decompress("zstd", bytes(bad))
 
 
 def test_own_roundtrip_and_frame_shape():
     for data in (b"", b"x", b"hello", b"r" * 100000, bytes(range(256)) * 700):
-        enc = zstd_compress(data)
+        enc = compress("zstd", data)
         assert enc[:4] == struct.pack("<I", 0xFD2FB528)
-        assert zstd_decompress(enc) == data
-    # long constant runs become RLE blocks: tiny frames
-    assert len(zstd_compress(b"r" * 100000)) < 50
+        assert decompress("zstd", enc) == data
+    # long constant runs compress to tiny frames
+    assert len(compress("zstd", b"r" * 100000)) < 50
 
 
 def test_concatenated_and_skippable_frames():
-    f1 = zstd_compress(b"first|")
+    f1 = compress("zstd", b"first|")
     skip = struct.pack("<II", 0x184D2A53, 7) + b"padding"
-    f2 = zstd_compress(b"second")
-    assert zstd_decompress(f1 + skip + f2) == b"first|second"
+    f2 = compress("zstd", b"second")
+    assert decompress("zstd", f1 + skip + f2) == b"first|second"
 
 
 def test_output_bound_enforced():
-    enc = zstd_compress(b"q" * 100000)
-    with pytest.raises(ZstdError):
-        zstd_decompress(enc, max_out=1000)
+    enc = compress("zstd", b"q" * 100000)
+    with pytest.raises(KafkaWireError):
+        decompress("zstd", enc, max_out=1000)
 
 
 def test_dictionary_frames_rejected():
     # descriptor 0x21: single-segment + 1-byte dictionary ID
     frame = struct.pack("<I", 0xFD2FB528) + bytes([0x21, 7, 3]) + b"\x01\x00abc"
-    with pytest.raises(ZstdError, match="dictionary"):
-        zstd_decompress(frame)
+    with pytest.raises(KafkaWireError, match="Dictionary"):
+        decompress("zstd", frame)
 
 
 @settings(max_examples=150, deadline=None)
@@ -99,24 +96,23 @@ def test_dictionary_frames_rejected():
 def test_garbage_never_crashes(tail):
     for payload in (tail, struct.pack("<I", 0xFD2FB528) + tail):
         try:
-            zstd_decompress(payload)
-        except ZstdError:
+            decompress("zstd", payload)
+        except KafkaWireError:
             pass
-        assert isinstance(ZstdError("x"), ValueError)
 
 
 @settings(max_examples=60, deadline=None)
 @given(st.data())
 def test_bit_flips_raise_or_return_bytes(data):
-    base = zstd_compress(b"payload " * 40 + b"Z" * 64)
+    base = compress("zstd", b"payload " * 40 + b"Z" * 64)
     i = data.draw(st.integers(0, len(base) - 1))
     bit = data.draw(st.integers(0, 7))
     mutated = bytearray(base)
     mutated[i] ^= 1 << bit
     try:
-        out = zstd_decompress(bytes(mutated), max_out=1 << 20)
+        out = decompress("zstd", bytes(mutated), max_out=1 << 20)
         assert isinstance(out, bytes)
-    except ZstdError:
+    except KafkaWireError:
         pass
 
 
@@ -156,7 +152,7 @@ def _cases() -> dict[str, bytes]:
 def test_decodes_canonical_cli_frames(level):
     for name, data in _cases().items():
         frame = _cli([level, "--single-thread"], data)
-        assert zstd_decompress(frame, max_out=1 << 26) == data, (level, name)
+        assert decompress("zstd", frame, max_out=1 << 26) == data, (level, name)
 
 
 @needs_cli
@@ -164,13 +160,13 @@ def test_decodes_cli_variant_frames():
     data = _cases()["multiblock"]
     for args in (["-3", "--no-check"], ["--long=27", "-12"], ["-6", "-T0"]):
         frame = _cli([*args], data)
-        assert zstd_decompress(frame, max_out=1 << 26) == data, args
+        assert decompress("zstd", frame, max_out=1 << 26) == data, args
 
 
 @needs_cli
 def test_cli_decodes_own_encoder():
     for name, data in _cases().items():
-        enc = zstd_compress(data)
+        enc = compress("zstd", data)
         p = subprocess.run(["zstd", "-d", "-c"], input=enc, capture_output=True)
         assert p.returncode == 0, (name, p.stderr[:300])
         assert p.stdout == data, name
