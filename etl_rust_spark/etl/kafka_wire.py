@@ -49,7 +49,6 @@ __all__ = [
     "KafkaWireError",
     "KafkaWireClient",
     "kafka_wire_client_factory",
-    "CODECS",
     "compress",
     "decompress",
     "crc32c",
@@ -133,19 +132,45 @@ def decode_varint(data: bytes, pos: int) -> tuple[int, int]:
 # that raises keeps n bytes of address space, so never read the bound
 # in one call), and raw snappy's length preamble is checked before
 # pyarrow allocates.
+#
+# lz4 frames are written with independent 64 KiB blocks (FLG B.Indep,
+# BD 64 KiB), as Kafka's own producer writes them: its Java brokers and
+# consumers inflate each block with no earlier-block prefix.  pyarrow's
+# frame encoder links blocks, so the frame is assembled here around
+# ``lz4_raw`` blocks; decoding reads any valid frame.
 # --------------------------------------------------------------------------
 
-CODECS = {1: "gzip", 2: "snappy", 3: "lz4", 4: "zstd"}
-_CODEC_IDS = {name: cid for cid, name in CODECS.items()}
+_CODECS = {1: "gzip", 2: "snappy", 3: "lz4", 4: "zstd"}
+_CODEC_IDS = {name: cid for cid, name in _CODECS.items()}
 _XERIAL_MAGIC = b"\x82SNAPPY\x00"
 _CHUNK = 1 << 16
+# magic, FLG (version 1, B.Indep), BD (64 KiB blocks), header checksum
+# (xxh32(FLG + BD) >> 8) & 0xFF
+_LZ4_HEADER = struct.pack("<I", 0x184D2204) + bytes((0x60, 0x40, 0x82))
+_LZ4_BLOCK = 1 << 16
 
 
 def compress(codec: str, data: bytes) -> bytes:
-    """``data`` as one ``codec`` stream (a name in :data:`CODECS`)."""
+    """``data`` as one ``codec`` stream (gzip, snappy, lz4 or zstd)."""
     if codec == "gzip":
         return gzip.compress(data, mtime=0)
+    if codec == "lz4":
+        return _lz4_frame(data)
     return pa.Codec(codec).compress(data, asbytes=True)
+
+
+def _lz4_frame(data: bytes) -> bytes:
+    raw = pa.Codec("lz4_raw")
+    out = bytearray(_LZ4_HEADER)
+    for pos in range(0, len(data), _LZ4_BLOCK):
+        chunk = data[pos : pos + _LZ4_BLOCK]
+        block = raw.compress(chunk, asbytes=True)
+        if len(block) < len(chunk):
+            out += struct.pack("<I", len(block)) + block
+        else:  # stored block: high bit of the size word
+            out += struct.pack("<I", len(chunk) | 1 << 31) + chunk
+    out += struct.pack("<I", 0)  # EndMark
+    return bytes(out)
 
 
 def decompress(codec: str, data: bytes, max_out: int = 1 << 27) -> bytes:
@@ -218,8 +243,8 @@ def encode_record_batch(
     first/max timestamp int64, producerId/Epoch/baseSequence (-1:
     idempotence off), record count, then zigzag-varint records.
 
-    ``compression`` names a codec in :data:`CODECS` (gzip, snappy,
-    lz4 or zstd; None = codec 0) and compresses the RECORDS section
+    ``compression`` names a records-section codec (gzip, snappy, lz4
+    or zstd; None = codec 0) and compresses the RECORDS section
     only — the 40-byte batch-body prefix stays clear so brokers can
     route without inflating; the record COUNT stays the logical count."""
     if not values:
@@ -309,8 +334,8 @@ def _decode_record_batch(data: bytes) -> list[tuple[int, bytes | None, bytes]]:
         )
         codec = attrs & 0x07
         p = 40  # fixed batch-body prefix (2+4+8+8+8+2+4+4)
-        if codec in CODECS:
-            body = body[:40] + decompress(CODECS[codec], body[40:])
+        if codec in _CODECS:
+            body = body[:40] + decompress(_CODECS[codec], body[40:])
         elif codec:
             raise KafkaWireError(f"unsupported compression codec {codec}")
         for _ in range(n):

@@ -153,12 +153,9 @@ def _launch_master(confs: dict[str, str]) -> str | None:
     """The master spark-submit or ``PYSPARK_SUBMIT_ARGS`` gave the driver
     JVM, or None when it was given none.  Starts that JVM first, with
     ``confs``, when this process has none yet: the launch-time confs
-    (driver memory and class path) only take effect then.  spark-submit
-    reports its own default, ``local[*]``, when no master is given, so
-    that value counts as none."""
+    (driver memory and class path) only take effect then."""
     SparkContext._ensure_initialized(conf=SparkConf().setAll(confs.items()))
-    master = SparkConf().get("spark.master", None)
-    return None if master == "local[*]" else master
+    return SparkConf().get("spark.master", None)
 
 
 def get_spark(
@@ -172,7 +169,13 @@ def get_spark(
     ``master=None`` takes the master given at launch (spark-submit's
     ``--master``, also through ``PYSPARK_SUBMIT_ARGS``) and falls back
     to ``local[$SPARK_GRAFT_CPUS]`` (all cores if the env var is unset)
-    when there is none.  The engine confs apply either way.
+    when there is none.  spark-submit reports ``local[*]`` when given no
+    master, so an explicit ``--master local[*]`` looks the same: with
+    ``SPARK_GRAFT_CPUS`` set it becomes ``local[$SPARK_GRAFT_CPUS]``,
+    without it stays ``local[*]``.  The engine confs apply either way.
+    A driver JVM this call starts gets the ``NioLocalFileSystem`` class
+    directory on its class path before the master is known; on a
+    cluster master that directory goes unused.
     """
     cpus = _cpus()
     partitions = shuffle_partitions or cpus
@@ -181,7 +184,9 @@ def get_spark(
         # filesystem class is only chosen once the master is known.
         launch = _session_confs("local", partitions, extra_confs)
         launch.pop("spark.hadoop.fs.file.impl", None)
-        master = _launch_master(launch) or f"local[{cpus}]"
+        master = _launch_master(launch)
+        if master is None or (master == "local[*]" and os.environ.get("SPARK_GRAFT_CPUS")):
+            master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     confs = _session_confs(master, partitions, extra_confs)
     for k, v in confs.items():

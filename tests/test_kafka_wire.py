@@ -649,6 +649,45 @@ def test_lz4_roundtrip_and_corrupt():
         decompress("lz4", good[:-9])  # cut reaches into the block itself
 
 
+def test_lz4_frames_have_independent_blocks():
+    """Kafka's Java brokers and consumers inflate each lz4 block with no
+    earlier-block prefix, so a frame past one 64 KiB block must set
+    B.Indep and every block must inflate on its own.  The random tail
+    does not compress and goes out as a stored block."""
+    import random
+    import struct
+
+    import pyarrow as pa
+
+    from etl_rust_spark.etl.kafka_wire import compress, decompress
+
+    data = b"the quick brown fox jumps over the lazy dog. " * 4000
+    data += random.Random(3).randbytes(70000)
+    frame = compress("lz4", data)
+    assert decompress("lz4", frame) == data
+    assert frame[:4] == struct.pack("<I", 0x184D2204)
+    assert frame[4] & 0x20  # FLG B.Indep
+    assert frame[5] == 0x40  # BD: 64 KiB blocks
+    raw = pa.Codec("lz4_raw")
+    pos, out, stored = 7, bytearray(), 0
+    while True:
+        (size,) = struct.unpack_from("<I", frame, pos)
+        pos += 4
+        if size == 0:  # EndMark
+            break
+        block = frame[pos : pos + (size & 0x7FFFFFFF)]
+        pos += len(block)
+        want = data[len(out) : len(out) + (1 << 16)]
+        if size & 1 << 31:
+            stored += 1
+            out += block
+        else:
+            out += raw.decompress(block, decompressed_size=len(want), asbytes=True)
+        assert out[-len(want) :] == want
+    assert pos == len(frame) and out == data
+    assert stored and len(frame) < len(data)
+
+
 def test_record_batch_lz4_roundtrip():
     import struct
 

@@ -115,10 +115,20 @@ def test_confs_local_master_only_and_keep_class_path(spark, monkeypatch):
     assert "spark.driver.extraClassPath" not in remote
 
 
-def test_master_none_keeps_launch_master(tmp_path):
+@pytest.mark.parametrize(
+    "submit_args, cpus, want",
+    [
+        ("--master local[2] pyspark-shell", "3", "local[2]"),
+        ("pyspark-shell", "3", "local[3]"),
+        ("--master local[*] pyspark-shell", None, "local[*]"),
+    ],
+)
+def test_master_none_keeps_launch_master(tmp_path, submit_args, cpus, want):
     """``get_spark()`` takes the master ``PYSPARK_SUBMIT_ARGS`` gives the
     driver JVM instead of overriding it with ``local[$SPARK_GRAFT_CPUS]``,
-    and still picks the java.nio filesystem for that local master."""
+    and still picks the java.nio filesystem for that local master.
+    Without a launch master it uses ``local[$SPARK_GRAFT_CPUS]``; a launch
+    ``local[*]`` with that env var unset stays as it is."""
     import subprocess
     import sys
 
@@ -133,17 +143,19 @@ def test_master_none_keeps_launch_master(tmp_path):
     )
     env = dict(
         os.environ,
-        PYSPARK_SUBMIT_ARGS="--master local[2] pyspark-shell",
-        SPARK_GRAFT_CPUS="3",
+        PYSPARK_SUBMIT_ARGS=submit_args,
         SPARK_GRAFT_DRIVER_MEM="1g",
         PYTHONPATH=str(Path(__file__).resolve().parents[1]),
     )
+    env.pop("SPARK_GRAFT_CPUS", None)
+    if cpus is not None:
+        env["SPARK_GRAFT_CPUS"] = cpus
     out = subprocess.run(
         [sys.executable, "-c", script], env=env, cwd=tmp_path,
         capture_output=True, text=True, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     master, fs_class = out.stdout.split()[-2:]
-    assert master == "local[2]"
+    assert master == want
     if shutil.which("javac"):
         assert fs_class == session.LOCAL_FS_CLASS
