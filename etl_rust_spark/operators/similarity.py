@@ -1,26 +1,41 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, mirroring the correctness/scale split everywhere else:
+Three families, one mechanism each:
 
-- **Brute force** (`cosine_topk`): query×corpus expansion + zip_with dot
-  product + per-query top-k window.  Exact; O(|Q|·|C|·d).  This is the
-  oracle-gated baseline and the right tool whenever |Q| is small (the
-  corpus side streams, queries broadcast).
-- **LSH ANN** (`ann_lsh_topk`): random-hyperplane signatures bucket the
-  corpus; candidates share a bucket prefix; exact re-rank within
-  candidates.  Approximate; turns all-pairs into a shuffle on bucket
-  keys.  Recall vs brute force is asserted in tests (≥ 0.9 on the
-  synthetic corpus).  The IVF analog (k-means coarse quantizer) swaps
-  the signature for a nearest-centroid id — same pipeline shape.
+- **BLAS brute force** (:func:`cosine_topk_blas`; :func:`cosine_topk`
+  is its documented name).  The bounded query set collects to the
+  driver, the corpus streams once through an Arrow-batched numpy
+  kernel, and one window ranks the per-task candidates.  Exact; the
+  oracle-gated baseline.  :func:`cosine_near_dup_pairs` and
+  :func:`cosine_join` are its all-pairs and cross-corpus forms
+  (sharded cogroup block matmul).
+- **Sign-LSH** (:func:`ann_lsh_topk`): random-hyperplane signatures
+  bucket the corpus, candidates share a bucket, and an exact cosine
+  re-ranks them.  The one ANN form for an unbounded, distributed query
+  set: nothing is collected to the driver.
+- **IVF index, optionally with PQ codes** (:func:`build_ivf_index` /
+  :func:`update_ivf_index` / :func:`ivf_search` and
+  :func:`build_ivfpq_index` / :func:`update_ivfpq_index` /
+  :func:`ivfpq_search`).  k-means centroids are trained once, and the
+  corpus is persisted PARTITIONED BY its ``list_id``.  A search probes
+  ``n_probe`` lists and reads only those partitions; it re-ranks the
+  stored vectors exactly (IVF) or scores m-byte PQ codes by ADC, with
+  an optional exact refine (IVF×PQ).
 
-Scale (100 TB / billions of vectors):
-- Broadcast the hyperplanes (a few KB), never the corpus.
-- Bucket skew: power-law buckets are split by AQE; for adversarial skew
-  append a salt digit to the bucket key and dedupe candidates.
-- The dot product stays JVM-side (zip_with/aggregate) — measured faster
-  than Arrow round-trips at d=64; for d ≥ ~512 a pandas_udf over numpy
-  matmul wins (vectorized BLAS beats codegen'd loops) — that switch is
-  a one-line change at the `_dot` seam.
+:func:`ann_entry_fused` is the gated ANN entry: LSH, fixed-centroid IVF
+and fixed-codebook PQ branches in one corpus pass.  The ``*_sql``
+functions are its DuckDB mirrors and those of the exact forms.
+
+Determinism: every gated kernel folds dots sequentially (``np.cumsum``,
+the association order of the SQL ``aggregate(zip_with(...))`` and
+``list_sum`` folds), rounds half away from zero (:func:`_round_half_up`,
+Spark/DuckDB ``ROUND``), and breaks ties on the lowest id or index.
+
+Scale: broadcast KB-sized constants (hyperplanes, centroids, codebooks,
+the bounded query set), never the corpus.  The corpus side is always a
+scan-side kernel or a partition-pruned read.  LSH bucket skew: AQE
+splits power-law buckets; for adversarial skew, append a salt digit to
+the bucket key and dedupe candidates.
 """
 
 from __future__ import annotations
@@ -34,7 +49,6 @@ __all__ = [
     "ann_lsh_topk",
     "ann_lsh_topk_duck_sql",
     "ivf_fixed_topk_duck_sql",
-    "ivf_topk",
     "build_ivf_index",
     "ivf_assign",
     "update_ivf_index",
@@ -50,16 +64,9 @@ __all__ = [
     "PQ_CODEBOOKS",
     "train_pq",
     "pq_encode",
-    "pq_topk",
-    "ivf_pq_topk",
     "build_ivfpq_index",
     "ivfpq_search",
     "update_ivfpq_index",
-    "train_pq_residual",
-    "pq_encode_residual",
-    "pq_residual_topk",
-    "pq_fixed_encode",
-    "pq_fixed_topk",
     "pq_fixed_topk_duck_sql",
     "ann_entry_fused",
 ]
@@ -68,24 +75,44 @@ _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
     "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
 )
+# The same sequential fold in DuckDB, over the first ``d`` elements.
+_DDOT = (
+    "list_sum(list_transform(range(1, {d} + 1), "
+    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
+)
 
-# Bounded-collect contract for the driver-side query reads of the BLAS
-# kernels (VERDICT r12 #8): the gated entries pass ≤ 20 query rows, but a
-# library caller could hand an unbounded frame — cap the control-plane
-# read so it can never become a driver OOM.  At d=64 float64 this bound
-# is ~35 MB of query state, far under any sensible driver heap.
+# Bounded-collect contract for the driver-side query reads (VERDICT r12
+# #8): the gated entries pass ≤ 20 query rows, but a library caller
+# could hand an unbounded frame — cap the control-plane read so it can
+# never become a driver OOM.  At d=64 float64 this bound is ~35 MB of
+# query state, far under any sensible driver heap.
 _MAX_QUERY_ROWS = 65_536
 
 
-def _collect_bounded(df: DataFrame, what: str) -> list:
-    rows = df.limit(_MAX_QUERY_ROWS + 1).collect()
+def _collect_queries(queries: DataFrame, id_col: str, vec_col: str, what: str):
+    """``(ids, mat, nrm)`` of the non-null query rows, sorted by id: the
+    one driver-side query read, capped at ``_MAX_QUERY_ROWS``.  ``mat``
+    is float64 (the CAST-to-double of the SQL folds); ``nrm`` is the
+    sequential-fold self-norm."""
+    import numpy as np
+
+    rows = queries.select(id_col, vec_col).limit(_MAX_QUERY_ROWS + 1).collect()
     if len(rows) > _MAX_QUERY_ROWS:
         raise ValueError(
             f"{what}: query side exceeds {_MAX_QUERY_ROWS} rows; the "
             "driver-collected kernels are for bounded query sets — "
             "pre-filter the queries or use the distributed join forms"
         )
-    return rows
+    rows = sorted(
+        ((int(r[0]), list(r[1])) for r in rows if r[1] is not None),
+        key=lambda t: t[0],
+    )
+    if not rows:
+        raise ValueError(f"{what}: no non-null query vectors")
+    ids = np.array([a for a, _ in rows], dtype=np.int64)
+    mat = np.array([b for _, b in rows], dtype=np.float64)
+    return ids, mat, np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
+
 
 # 16 fixed 64-d hyperplanes for the sign-LSH signature.  Deterministic
 # constants (generated once from a seeded RNG, inlined so runs are
@@ -102,6 +129,28 @@ def _norm(col: str) -> str:
     return f"sqrt({_DOT.format(a=col, b=col)})"
 
 
+def _cos() -> F.Column:
+    """4-dp rounded cosine of the ``qv``/``cv`` columns over their
+    ``qn``/``cn`` norms.  ``+ 0.0`` normalizes IEEE negative zero:
+    Spark's ROUND returns +0.0 for tiny negatives but DuckDB's keeps the
+    sign, so a cosine that rounds to zero would hash-mismatch without it
+    (CORRECTNESS_r04 op_ann_topk: '0.0' vs '-0.0')."""
+    return F.round(
+        F.expr(_DOT.format(a="qv", b="cv")) / (F.col("qn") * F.col("cn")), 4
+    ) + F.lit(0.0)
+
+
+def _top_k(pairs: DataFrame, k: int, score: str = "cos") -> DataFrame:
+    """(qid, cid, score, rn) with rn ≤ k: the per-query ranking window,
+    ties broken on cid ascending."""
+    w = Window.partitionBy("qid").orderBy(F.desc(score), F.asc("cid"))
+    return (
+        pairs.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("qid", "cid", score, "rn")
+    )
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -109,36 +158,15 @@ def cosine_topk(
     vec_col: str = "embedding",
     k: int = 3,
 ) -> DataFrame:
-    """Exact cosine top-k: (qid, cid, cos, rn) with rn ≤ k.
+    """Exact cosine top-k: (qid, cid, cos, rn) with rn ≤ k, computed by
+    :func:`cosine_topk_blas`.
 
-    Ranking uses the ROUNDed cosine (4 dp) with cid tie-break so results
-    are deterministic across engines and summation orders.
+    Ranking uses the 4-dp rounded cosine with a cid tie-break, so
+    results are deterministic across engines and summation orders.
+    Rows with a NULL or zero-norm embedding drop on both sides: their
+    cosine is 0/0, NULL in the SQL mirror, and never ranks.
     """
-    q = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).withColumn("qn", F.expr(_norm("qv")))
-    c = corpus.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
-    ).withColumn("cn", F.expr(_norm("cv")))
-    pairs = (
-        F.broadcast(q)
-        .join(c, F.col("qid") != F.col("cid"))
-        .withColumn(
-            # + 0.0 normalizes IEEE negative zero: Spark's ROUND returns
-            # +0.0 for tiny negatives but DuckDB's keeps the sign, so a
-            # cosine that rounds to zero would hash-mismatch without it
-            # (CORRECTNESS_r04 op_ann_topk: '0.0' vs '-0.0').
-            "cos",
-            F.round(F.expr(_DOT.format(a="qv", b="cv")) / (F.col("qn") * F.col("cn")), 4)
-            + F.lit(0.0),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("cid"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "cid", "cos", "rn")
-    )
+    return cosine_topk_blas(queries, corpus, id_col, vec_col, k)
 
 
 def cosine_topk_blas(
@@ -148,41 +176,28 @@ def cosine_topk_blas(
     vec_col: str = "embedding",
     k: int = 3,
 ) -> DataFrame:
-    """Engine form of :func:`cosine_topk` — identical rows, one corpus
-    pass (r12, the dq33 precedent).
+    """Exact cosine top-k in one corpus pass (r12, the dq33 precedent).
 
-    The expression form broadcast-nested-loop-joins every query against
-    every corpus row (a |Q|×N pair *relation*) and evaluates the dot as
-    an interpreted ``aggregate(zip_with(...))`` HOF per pair — at 10⁹
-    vectors that materializes |Q|×10⁹ rows to rank.  Here the bounded
-    query set (≤ tens of rows by contract) collects to the driver, the
-    corpus streams ONCE through an Arrow-batched numpy kernel (per-chunk
-    top-k candidates only leave the kernel), and a final window ranks
-    n_tasks×|Q|×k candidate rows.
+    The expression form (:func:`cosine_topk_sql`) broadcast-nested-loop-
+    joins every query against every corpus row (a |Q|×N pair *relation*)
+    and evaluates the dot as an interpreted ``aggregate(zip_with(...))``
+    HOF per pair — at 10⁹ vectors that materializes |Q|×10⁹ rows to
+    rank.  Here the bounded query set (≤ tens of rows by contract)
+    collects to the driver, the corpus streams ONCE through an
+    Arrow-batched numpy kernel (per-chunk top-k candidates only leave
+    the kernel), and a final window ranks n_tasks×|Q|×k candidate rows.
 
-    Float parity with the SQL form (the pq_fixed_topk argument): dots
-    and self-norms are sequential folds (``np.cumsum`` — the
-    ``((0+p₁)+p₂)+…`` association of ``aggregate(zip_with(...))``) in
-    float64 over the CAST-to-double float32 inputs, rounded
-    ``_round_half_up(·, 4) + 0.0`` before any comparison; ties break on
-    cid ascending in both forms.  Zero-norm rows drop (SQL: 0/0 → NULL
-    fails the ranking — the documented pq_fixed_topk convention).
+    Float parity with the SQL form: dots and self-norms are sequential
+    folds (``np.cumsum`` — the ``((0+p₁)+p₂)+…`` association of
+    ``aggregate(zip_with(...))``) in float64 over the CAST-to-double
+    float32 inputs, rounded ``_round_half_up(·, 4) + 0.0`` before any
+    comparison; ties break on cid ascending in both forms.  Zero-norm
+    rows drop (SQL: 0/0 → NULL fails the ranking).
     """
     import numpy as np
 
     spark = corpus.sparkSession
-    q_rows = sorted(
-        (int(r[0]), np.asarray(list(r[1]), dtype=np.float64))
-        for r in _collect_bounded(
-            queries.select(id_col, vec_col), "cosine_topk_blas"
-        )
-        if r[1] is not None
-    )
-    if not q_rows:
-        raise ValueError("cosine_topk_blas: no non-null query vectors")
-    q_ids = np.array([a for a, _ in q_rows], dtype=np.int64)
-    q_mat = np.stack([b for _, b in q_rows])
-    q_nrm = np.sqrt(np.cumsum(q_mat * q_mat, axis=1)[:, -1])
+    q_ids, q_mat, q_nrm = _collect_queries(queries, id_col, vec_col, "cosine_topk_blas")
     ok = q_nrm > 0
     q_ids, q_mat, q_nrm = q_ids[ok], q_mat[ok], q_nrm[ok]
     bc = spark.sparkContext.broadcast((q_ids, q_mat, q_nrm))
@@ -228,29 +243,7 @@ def cosine_topk_blas(
     cand = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     ).mapInPandas(gen, "qid long, cid long, cos double")
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("cid"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "cid", "cos", "rn")
-    )
-
-
-def _signature_expr(vec_col: str, n_planes: int) -> F.Column:
-    """Sign-LSH signature: bit j = 1 iff dot(v, plane_j) > 0.
-
-    The dot is ROUNDed to 6 dp before the sign test so the bit cannot
-    flip across engines/summation orders when a dot sits within one ulp
-    of zero — the same determinism trick as the 4-dp cosine re-rank.
-    This makes the whole LSH path oracle-gateable (DuckDB mirror:
-    :func:`ann_lsh_topk_duck_sql`)."""
-    bits = []
-    for j in range(n_planes):
-        plane = "array(" + ", ".join(f"CAST({x} AS DOUBLE)" for x in HYPERPLANES[j]) + ")"
-        bits.append(
-            f"CASE WHEN ROUND({_DOT.format(a=vec_col, b=plane)}, 6) > 0 THEN shiftleft(1L, {j}) ELSE 0L END"
-        )
-    return F.expr("(" + " + ".join(bits) + ")")
+    return _top_k(cand, k)
 
 
 def _round_half_up(x, dp: int):
@@ -261,22 +254,45 @@ def _round_half_up(x, dp: int):
     return np.sign(x) * np.floor(np.abs(x) * m + 0.5) / m
 
 
+def _centroid_sims(v, cent):
+    """(n, n_lists) centroid similarities, fold-exact: sequential
+    (cumsum) dots and self-norm, ``ROUND(dot / nrm, 6)`` half away from
+    zero — bit-equal to :func:`ivf_fixed_topk_duck_sql`'s ``sims``.  The
+    one list-assignment kernel: ``argmax`` assigns (first occurrence =
+    lowest list index), :func:`_probe` probes."""
+    import numpy as np
+
+    dots = np.cumsum(v[:, None, :] * cent[None, :, :], axis=2)[:, :, -1]
+    nrm = np.sqrt(np.cumsum(v * v, axis=1)[:, -1])
+    return _round_half_up(dots / np.maximum(nrm[:, None], 1e-30), 6)
+
+
+def _probe(v, cent, n_probe: int):
+    """(n, min(n_probe, n_lists)) probed list ids per row, nearest first;
+    the stable sort breaks ties to the lowest list index, the order of
+    the SQL mirror's ``ORDER BY sim DESC, j``."""
+    import numpy as np
+
+    sims = _centroid_sims(v, cent)
+    return np.argsort(-sims, axis=1, kind="stable")[:, : min(n_probe, len(cent))]
+
+
 def _sig_norm_pandas(
     df: DataFrame, id_col: str, vec_col: str, n_planes: int, out_id: str, out_vec: str
 ) -> DataFrame:
     """(id, vec, bucket, norm) via one Arrow-batched numpy pass.
 
-    Numerically identical to the ``_signature_expr`` + ``_norm``
-    expression forms (which stay as the documented semantics and the
-    DuckDB-mirror template): per-plane dots and the self-dot reproduce
-    the sequential SQL fold with a cumulative sum along the dim axis
-    (the dq33 engine-form argument — matmul's pairwise SIMD order could
-    flip a boundary round; cumsum cannot), then the identical
-    6-dp half-up sign test.  The expression form evaluates ~n_planes×dim
-    interpreted lambda calls per row (HOFs never enter codegen); this
-    pass is one BLAS-shaped kernel per Arrow batch — ~3× the whole
-    operator at bench scale, and the per-row constant is what dominates
-    at 10⁹ vectors too.
+    Numerically identical to the SQL signature of
+    :func:`ann_lsh_topk_duck_sql` (bit j set iff
+    ``ROUND(dot(v, plane_j), 6) > 0``) and to the ``_norm`` expression:
+    per-plane dots and the self-dot reproduce the sequential SQL fold
+    with a cumulative sum along the dim axis (the dq33 engine-form
+    argument — matmul's pairwise SIMD order could flip a boundary round;
+    cumsum cannot), then the identical 6-dp half-up sign test.  An
+    expression form evaluates ~n_planes×dim interpreted lambda calls per
+    row (HOFs never enter codegen); this pass is one BLAS-shaped kernel
+    per Arrow batch — ~3× the whole operator at bench scale, and the
+    per-row constant is what dominates at 10⁹ vectors too.
     """
     import numpy as np
     import pandas as pd
@@ -383,18 +399,8 @@ def ann_lsh_topk(
     else:
         q = _sig_norm_pandas(queries, id_col, vec_col, n_bucket_planes, "qid", "qv")
         q = q.withColumnRenamed("nrm", "qn")
-    pairs = q.join(c, ["bucket"]).filter(F.col("qid") != F.col("cid")).withColumn(
-        # + 0.0: negative-zero normalization (see cosine_topk).
-        "cos",
-        F.round(F.expr(_DOT.format(a="qv", b="cv")) / (F.col("qn") * F.col("cn")), 4)
-        + F.lit(0.0),
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("cid"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "cid", "cos", "rn")
-    )
+    pairs = q.join(c, ["bucket"]).filter(F.col("qid") != F.col("cid"))
+    return _top_k(pairs.withColumn("cos", _cos()), k)
 
 
 def cosine_topk_sql(max_query: int = 20, k: int = 3, dim: int = 64) -> tuple[str, str]:
@@ -411,16 +417,13 @@ pairs AS (
 SELECT qid, cid, cos, rn FROM (
   SELECT qid, cid, cos, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rn FROM pairs) t
 WHERE rn <= {k} ORDER BY qid, rn"""
-    ddot = (
-        "list_sum(list_transform(range(1, {d} + 1), i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-    )
     duck = f"""
 WITH n AS (SELECT vec_id, embedding,
-             sqrt({ddot.format(a='embedding', b='embedding', d=dim)}) AS nrm
+             sqrt({_DDOT.format(a='embedding', b='embedding', d=dim)}) AS nrm
            FROM embeddings),
 pairs AS (
   SELECT a.vec_id AS qid, b.vec_id AS cid,
-    ROUND({ddot.format(a='a.embedding', b='b.embedding', d=dim)} / (a.nrm * b.nrm), 4) + 0.0 AS cos
+    ROUND({_DDOT.format(a='a.embedding', b='b.embedding', d=dim)} / (a.nrm * b.nrm), 4) + 0.0 AS cos
   FROM n a JOIN n b ON a.vec_id != b.vec_id
   WHERE a.vec_id <= {max_query})
 SELECT qid, cid, cos, rn FROM (
@@ -454,10 +457,6 @@ def ann_lsh_topk_duck_sql(
         f"list_sum(list_transform(range(1, {dim} + 1), "
         "i -> CAST(e.embedding[i] AS DOUBLE) * pl.p[i]))"
     )
-    ddot = (
-        "list_sum(list_transform(range(1, {d} + 1), "
-        "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-    )
     return f"""
 WITH planes(j, p) AS (VALUES {plane_rows}),
 sig AS (
@@ -466,13 +465,13 @@ sig AS (
                   THEN (1::BIGINT << pl.j) ELSE 0::BIGINT END) AS BIGINT) AS bucket
   FROM embeddings e CROSS JOIN planes pl GROUP BY e.vec_id),
 n AS (SELECT vec_id, embedding,
-        sqrt({ddot.format(a='embedding', b='embedding', d=dim)}) AS nrm
+        sqrt({_DDOT.format(a='embedding', b='embedding', d=dim)}) AS nrm
       FROM embeddings),
 b AS (SELECT n.vec_id, n.embedding, n.nrm, sig.bucket
       FROM n JOIN sig ON n.vec_id = sig.vec_id),
 pairs AS (
   SELECT a.vec_id AS qid, c.vec_id AS cid,
-    ROUND({ddot.format(a='a.embedding', b='c.embedding', d=dim)} / (a.nrm * c.nrm), 4) + 0.0 AS cos
+    ROUND({_DDOT.format(a='a.embedding', b='c.embedding', d=dim)} / (a.nrm * c.nrm), 4) + 0.0 AS cos
   FROM b a JOIN b c ON a.bucket = c.bucket AND a.vec_id != c.vec_id
   WHERE a.vec_id <= {max_query})
 SELECT 'lsh' AS src, qid, cid, cos, rn FROM (
@@ -487,28 +486,24 @@ def ivf_fixed_topk_duck_sql(
     n_probe: int = 2,
     dim: int = 64,
 ) -> str:
-    """DuckDB mirror of :func:`ivf_topk` with FIXED centroids
-    (``HYPERPLANES[:n_lists]``) — closes the IVF gate gap (VERDICT r5
-    "What's missing" #3): k-means TRAINING is iterative and stays
-    recall-tested, but the SEARCH path (assign → probe → candidate join
-    → exact re-rank) has no learned state, so with explicit centroids
-    it is plain SQL and hash-gates like the sign-LSH path.
+    """DuckDB mirror of :func:`ann_entry_fused`'s ``'ivf'`` branch: IVF
+    search with FIXED centroids (``HYPERPLANES[:n_lists]``).  k-means
+    TRAINING is iterative and stays recall-tested, but the SEARCH path
+    (assign → probe → candidate join → exact re-rank) has no learned
+    state, so with explicit centroids it is plain SQL and hash-gates
+    like the sign-LSH branch.
 
-    Determinism contract shared with the Spark kernels: sequential-fold
-    dots, half-up ROUND(dot/nrm, 6) centroid similarity, ties to the
-    lowest centroid index, DISTINCT candidate pairs before ranking,
-    4-dp cosine re-rank with the negative-zero ``+ 0.0`` guard, cid
-    tie-break.
+    Determinism contract shared with the Spark kernels
+    (:func:`_centroid_sims`): sequential-fold dots, half-up
+    ROUND(dot/nrm, 6) centroid similarity, ties to the lowest centroid
+    index, DISTINCT candidate pairs before ranking, 4-dp cosine re-rank
+    with the negative-zero ``+ 0.0`` guard, cid tie-break.
     """
     cent_rows = ",\n  ".join(
         "({j}, [{vals}])".format(
             j=j, vals=", ".join(str(x) for x in HYPERPLANES[j][:dim])
         )
         for j in range(n_lists)
-    )
-    ddot = (
-        "list_sum(list_transform(range(1, {d} + 1), "
-        "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
     )
     dot_cent = (
         f"list_sum(list_transform(range(1, {dim} + 1), "
@@ -517,7 +512,7 @@ def ivf_fixed_topk_duck_sql(
     return f"""
 WITH cent(j, c) AS (VALUES {cent_rows}),
 n AS (SELECT vec_id, embedding,
-        sqrt({ddot.format(a='embedding', b='embedding', d=dim)}) AS nrm
+        sqrt({_DDOT.format(a='embedding', b='embedding', d=dim)}) AS nrm
       FROM embeddings),
 sims AS (SELECT n.vec_id, ct.j, ROUND({dot_cent} / n.nrm, 6) AS sim
          FROM n CROSS JOIN cent ct),
@@ -530,7 +525,7 @@ probes AS (SELECT vec_id, j AS list_id FROM (
 cand AS (SELECT DISTINCT p.vec_id AS qid, a.vec_id AS cid
          FROM probes p JOIN assign a USING (list_id) WHERE p.vec_id != a.vec_id),
 pairs AS (SELECT cand.qid, cand.cid,
-    ROUND({ddot.format(a='q.embedding', b='c2.embedding', d=dim)} / (q.nrm * c2.nrm), 4) + 0.0 AS cos
+    ROUND({_DDOT.format(a='q.embedding', b='c2.embedding', d=dim)} / (q.nrm * c2.nrm), 4) + 0.0 AS cos
   FROM cand JOIN n q ON q.vec_id = cand.qid JOIN n c2 ON c2.vec_id = cand.cid)
 SELECT 'ivf' AS src, qid, cid, cos, rn FROM (
   SELECT qid, cid, cos, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rn FROM pairs) t
@@ -540,175 +535,13 @@ WHERE rn <= {k} ORDER BY qid, rn"""
 #: Fixed PQ codebooks for the ORACLE-GATED search path: m=8 contiguous
 #: subspaces of dim 8 over the 64-dim embeddings, 4 codewords each,
 #: sliced deterministically from the inlined HYPERPLANES constants so
-#: both dialects print the identical literals (the ivf_fixed_topk
-#: precedent: TRAINING is iterative and stays recall-tested; the
+#: both dialects print the identical literals (as with the fixed IVF
+#: centroids: TRAINING is iterative and stays recall-tested; the
 #: encode → reconstruct → re-rank SEARCH path has no learned state).
 PQ_CODEBOOKS: list[list[list[float]]] = [
     [HYPERPLANES[(4 * j + c) % 16][8 * j : 8 * j + 8] for c in range(4)]
     for j in range(8)
 ]
-
-
-def pq_fixed_encode(
-    corpus: DataFrame,
-    codebooks=None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(cid, recon): PQ-encode with FIXED codebooks and emit the
-    reconstruction (concatenated nearest codewords) — the deterministic
-    half of the gated PQ search path.
-
-    Determinism contract (shared with the DuckDB mirror,
-    :func:`pq_fixed_topk_duck_sql`): per-subspace squared distance is a
-    SEQUENTIAL fold (np.cumsum — same association order as the SQL
-    ``list_sum(list_transform(...))``), ROUNDed half-away-from-zero to
-    6 dp before the argmin, ties to the LOWEST codeword index
-    (np.argmin first-occurrence == ``ORDER BY d2, c``).  Null
-    embeddings are dropped (registry-wide null-guard rule).
-
-    Scale shape: one Arrow-batched scan-side kernel, broadcast KB-sized
-    codebooks, zero shuffles — the corpus never moves.
-    """
-    import numpy as np
-
-    spark = corpus.sparkSession
-    cb = np.asarray(
-        PQ_CODEBOOKS if codebooks is None else codebooks, dtype=np.float64
-    )
-    bc = spark.sparkContext.broadcast(cb)
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        books = bc.value
-        m, _kc, d_sub = books.shape
-        for pdf in batches:
-            pdf = pdf[pdf["v"].map(lambda x: x is not None)]
-            if not len(pdf):
-                continue
-            mat = np.array([list(x) for x in pdf["v"]], dtype=np.float64)
-            recon = np.empty_like(mat)
-            for j in range(m):
-                sub = mat[:, j * d_sub : (j + 1) * d_sub]
-                diff = sub[:, None, :] - books[j][None, :, :]
-                d2 = np.cumsum(diff * diff, axis=2)[:, :, -1]
-                codes = np.argmin(_round_half_up(d2, 6), axis=1)
-                recon[:, j * d_sub : (j + 1) * d_sub] = books[j][codes]
-            yield pd.DataFrame(
-                {"cid": pdf["id"], "recon": [r.tolist() for r in recon]}
-            )
-
-    return corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    ).mapInPandas(gen, "cid long, recon array<double>")
-
-
-def pq_fixed_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Oracle-gated PQ search: encode the corpus with the FIXED
-    :data:`PQ_CODEBOOKS`, then exact rounded-cosine top-k of the
-    original queries against the RECONSTRUCTIONS — which is precisely
-    what ADC computes (``dot(q, recon(c))`` decomposed into m table
-    lookups).  DuckDB mirror: :func:`pq_fixed_topk_duck_sql`.
-
-    Encode and score are FUSED into one scan-side Arrow kernel (the
-    separate :func:`pq_fixed_encode` + expression-join form measured
-    ~0.3 s slower at sf0.1 — the HOF dot never enters codegen): per
-    corpus batch, encode → reconstruct → fold-exact cosine against the
-    broadcast queries (sequential cumsum dots + self-norms in the SQL
-    association order, ``_round_half_up(·, 4) + 0.0``) → per-partition
-    top-(k+1) per query; only those candidate rows reach the final
-    window.  Zero-norm rows drop (SQL: 0/0 → NULL fails the ranking).
-    """
-    import numpy as np
-
-    spark = corpus.sparkSession
-    cb = np.asarray(PQ_CODEBOOKS, dtype=np.float64)
-    q_rows = sorted(
-        (int(r[0]), np.asarray(list(r[1]), dtype=np.float64))
-        for r in _collect_bounded(
-            queries.select(id_col, vec_col), "pq_fixed_topk"
-        )
-        if r[1] is not None
-    )
-    if not q_rows:
-        raise ValueError("pq_fixed_topk: no non-null query vectors")
-    q_ids = np.array([a for a, _ in q_rows], dtype=np.int64)
-    q_mat = np.stack([b for _, b in q_rows])
-    q_nrm = np.sqrt(np.cumsum(q_mat * q_mat, axis=1)[:, -1])
-    ok = q_nrm > 0
-    q_ids, q_mat, q_nrm = q_ids[ok], q_mat[ok], q_nrm[ok]
-    bc = spark.sparkContext.broadcast((cb, q_ids, q_mat, q_nrm))
-    keep = k + 1  # +1 so dropping the self-match still leaves k
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        books, ids, qm, qn = bc.value
-        m, _kc, d_sub = books.shape
-        parts: list[pd.DataFrame] = []
-        for pdf in batches:
-            pdf = pdf[pdf["v"].map(lambda x: x is not None)]
-            if not len(pdf):
-                continue
-            # bounded (|Q| × chunk × dim) temporaries — Arrow batch size
-            # is config-dependent, the kernel must not be
-            for lo in range(0, len(pdf), 2048):
-                ch = pdf.iloc[lo : lo + 2048]
-                c_ids = ch["id"].to_numpy(np.int64)
-                mat = np.array([list(x) for x in ch["v"]], dtype=np.float64)
-                recon = np.empty_like(mat)
-                for j in range(m):
-                    sub = mat[:, j * d_sub : (j + 1) * d_sub]
-                    diff = sub[:, None, :] - books[j][None, :, :]
-                    d2 = np.cumsum(diff * diff, axis=2)[:, :, -1]
-                    codes = np.argmin(_round_half_up(d2, 6), axis=1)
-                    recon[:, j * d_sub : (j + 1) * d_sub] = books[j][codes]
-                c_nrm = np.sqrt(np.cumsum(recon * recon, axis=1)[:, -1])
-                nz = c_nrm > 0
-                c_ids, recon, c_nrm = c_ids[nz], recon[nz], c_nrm[nz]
-                if not len(c_ids):
-                    continue
-                dots = np.cumsum(qm[:, None, :] * recon[None, :, :], axis=2)[:, :, -1]
-                cos = _round_half_up(dots / (qn[:, None] * c_nrm[None, :]), 4) + 0.0
-                top = min(keep, cos.shape[1])
-                for qi in range(len(ids)):
-                    order = np.lexsort((c_ids, -cos[qi]))[:top]
-                    parts.append(
-                        pd.DataFrame(
-                            {"qid": ids[qi], "cid": c_ids[order], "cos": cos[qi][order]}
-                        )
-                    )
-        if parts:
-            allp = pd.concat(parts, ignore_index=True)
-            yield (
-                allp.sort_values(["qid", "cos", "cid"], ascending=[True, False, True])
-                .groupby("qid", sort=False)
-                .head(keep)
-            )
-        else:
-            yield pd.DataFrame({"qid": pd.Series(dtype="int64"),
-                                "cid": pd.Series(dtype="int64"),
-                                "cos": pd.Series(dtype="float64")})
-
-    cand = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    ).mapInPandas(gen, "qid long, cid long, cos double")
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("cid"))
-    return (
-        cand.filter(F.col("cid") != F.col("qid"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "cid", "cos", "rn")
-    )
 
 
 def ann_entry_fused(
@@ -722,64 +555,61 @@ def ann_entry_fused(
 ) -> DataFrame:
     """The gated LSH ∪ IVF ∪ PQ entry as ONE corpus pass (r12).
 
-    Row-for-row equal to the three-branch composition
-    (``ann_lsh_topk(query_pred=id<=max_query)`` ∪
-    ``ivf_topk(centroids=HYPERPLANES[:prefix_bits], n_probe)`` ∪
-    ``pq_fixed_topk``), which scanned the corpus THREE times through
-    three separate Python kernels and ranked each branch under its own
-    window exchange.  Here the corpus streams ONCE through a single
-    Arrow-batched kernel that emits tagged ``(src, qid, cid, cos)``
-    candidates for all three detectors, and one shared window ranks
-    them per ``(src, qid)`` — disjoint ``src`` partitions make the
-    shared window's row_number identical to three per-branch windows
-    (guide §2.4/§4.1: 3 scans + 5 Python crossings + 3 window
-    exchanges → 1 + 1 + 1; at 10⁹ vectors this deletes two full corpus
-    passes).
+    The queries are the corpus rows with ``id <= max_query``.  Three
+    branches, each tagged by ``src`` and ranked top-``k`` by the 4-dp
+    rounded cosine with a cid tie-break:
 
-    Equivalence notes (each gate-proven by the r11 kernels this fuses):
-    - The entry's IVF centroids ARE the LSH planes
-      (``HYPERPLANES[:prefix_bits]``), so the per-batch plane dots are
-      computed once and feed both the sign test and the assignment.
+    - ``'lsh'``: candidates share the query's sign-LSH bucket (the low
+      ``prefix_bits`` signature bits over ``HYPERPLANES``); mirror
+      :func:`ann_lsh_topk_duck_sql`.
+    - ``'ivf'``: IVF search with FIXED centroids
+      ``HYPERPLANES[:prefix_bits]``: each corpus vector is assigned to
+      its nearest centroid, each query probes its ``n_probe`` nearest,
+      candidates are the probed lists' members; mirror
+      :func:`ivf_fixed_topk_duck_sql`.
+    - ``'pq'``: every corpus vector is encoded with the FIXED
+      :data:`PQ_CODEBOOKS` and the queries rank the reconstructions,
+      which is what ADC computes (``dot(q, recon(c))`` decomposed into m
+      table lookups); mirror :func:`pq_fixed_topk_duck_sql`.
+
+    The corpus streams ONCE through a single Arrow-batched kernel that
+    emits tagged ``(src, qid, cid, cos)`` candidates for all three
+    branches, and one shared window ranks them per ``(src, qid)`` —
+    disjoint ``src`` partitions make its row_number identical to three
+    per-branch windows (guide §2.4/§4.1: 1 scan + 1 Python crossing + 1
+    window exchange, where three separate branches took 3 + 5 + 3).
+
+    Equivalence with the mirrors:
+    - The IVF centroids ARE the LSH planes, so the per-batch plane dots
+      are computed once and feed both the sign test and the assignment.
     - All dots/norms are sequential folds (``np.cumsum``) in float64 —
-      the exact association order of the SQL ``aggregate(zip_with(...))``
-      forms the branch expressions evaluated; rounds are
+      the exact association order of the SQL folds; rounds are
       ``_round_half_up`` (= Spark/DuckDB ROUND on every value this gate
       has ever seen).
     - Each (qid, cid) pair is emitted at most once per branch: a corpus
-      vector has exactly one ``list_id`` and one ``bucket``, so the old
-      ``dropDuplicates`` was already a no-op.
-    - The query side (≤ ``max_query`` rows by construction) collects to
-      the driver — the same bounded control-plane read ``pq_fixed_topk``
-      always did — and ships with the broadcast constants, replacing
-      two more scan+kernel jobs (LSH query signature, IVF probe).
+      vector has exactly one ``list_id`` and one ``bucket``.
+    - PQ: zero-norm reconstructions and queries drop (SQL: 0/0 → NULL
+      fails the ranking); each task keeps its top-``(k+1)`` per query so
+      dropping the self-match still leaves ``k``.
+    - The query side (≤ ``max_query`` rows by construction) is read by
+      the one capped driver collect (:func:`_collect_queries`) and ships
+      with the broadcast constants, so the query signature and the IVF
+      probe cost no scan.
     """
     import numpy as np
 
     spark = corpus.sparkSession
     planes = np.array([HYPERPLANES[j] for j in range(prefix_bits)], dtype=np.float64)
     cb = np.asarray(PQ_CODEBOOKS, dtype=np.float64)
-    q_rows = sorted(
-        (int(r[0]), np.asarray(list(r[1]), dtype=np.float64))
-        for r in _collect_bounded(
-            corpus.filter(F.col(id_col) <= max_query).select(id_col, vec_col),
-            "ann_entry_fused",
-        )
-        if r[1] is not None
+    q_ids, q_mat, q_nrm = _collect_queries(
+        corpus.filter(F.col(id_col) <= max_query), id_col, vec_col, "ann_entry_fused"
     )
-    if not q_rows:
-        raise ValueError("ann_entry_fused: no non-null query vectors")
-    q_ids = np.array([a for a, _ in q_rows], dtype=np.int64)
-    q_mat = np.stack([b for _, b in q_rows])
-    # Shared sequential-fold norms (= sqrt of the SQL self-dot fold).
-    q_nrm = np.sqrt(np.cumsum(q_mat * q_mat, axis=1)[:, -1])
     # LSH query buckets: 6-dp half-up sign test on the plane dots.
     q_dots = np.cumsum(q_mat[:, None, :] * planes[None, :, :], axis=2)[:, :, -1]
     q_bucket = ((_round_half_up(q_dots, 6) > 0) @ (1 << np.arange(prefix_bits))).astype(
         np.int64
     )
-    # IVF probes: same normalized-similarity + stable argsort as probe_gen.
-    q_sims = _round_half_up(q_dots / np.maximum(q_nrm[:, None], 1e-30), 6)
-    q_probes = np.argsort(-q_sims, axis=1, kind="stable")[:, : min(n_probe, prefix_bits)]
+    q_probes = _probe(q_mat, planes, n_probe)
     # PQ keeps only non-zero-norm queries (0/0 → NULL fails the SQL rank).
     pq_ok = q_nrm > 0
     bc = spark.sparkContext.broadcast(
@@ -847,8 +677,9 @@ def ann_entry_fused(
             out = lsh_ivf(cids_all, mat_all, nrm_all, bucket, list_id)
             if out is not None:
                 yield out
-            # PQ: encode → reconstruct → score, per bounded chunk,
-            # accumulated per task exactly like pq_fixed_topk's kernel.
+            # PQ: encode → reconstruct → score, per bounded chunk (the
+            # (|Q| × chunk × dim) temporaries stay bounded whatever the
+            # Arrow batch size), top-(k+1) per query accumulated per task.
             for lo in range(0, len(pdf), 2048):
                 c_ids = cids_all[lo : lo + 2048]
                 recon = np.empty_like(mat_all[lo : lo + 2048])
@@ -895,7 +726,7 @@ def ann_entry_fused(
     w = Window.partitionBy("src", "qid").orderBy(F.desc("cos"), F.asc("cid"))
     return (
         # lsh/ivf already exclude self in the kernel; pq keeps keep=k+1
-        # candidates and drops self here, exactly like pq_fixed_topk.
+        # candidates and drops self here.
         cand.filter(F.col("cid") != F.col("qid"))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
@@ -904,7 +735,7 @@ def ann_entry_fused(
 
 
 def pq_fixed_topk_duck_sql(max_query: int = 20, k: int = 3, dim: int = 64) -> str:
-    """DuckDB mirror of :func:`pq_fixed_topk` — encode (per-subspace
+    """DuckDB mirror of :func:`ann_entry_fused`'s ``'pq'`` branch — encode (per-subspace
     sequential-fold squared distance, 6-dp half-up round, lowest-index
     tie), reconstruct (codewords concatenated in subspace order), exact
     4-dp rounded-cosine re-rank with the ``+ 0.0`` negative-zero guard
@@ -921,10 +752,6 @@ def pq_fixed_topk_duck_sql(max_query: int = 20, k: int = 3, dim: int = 64) -> st
         for c in range(kc)
     )
     elem = f"CAST(e.embedding[{d_sub} * cb.j + i] AS DOUBLE)"
-    ddot = (
-        "list_sum(list_transform(range(1, {d} + 1), "
-        "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-    )
     return f"""
 WITH cb(j, c, v) AS (VALUES {cb_rows}),
 e AS (SELECT vec_id, embedding FROM embeddings WHERE embedding IS NOT NULL),
@@ -939,12 +766,12 @@ recon AS (SELECT codes.vec_id, flatten(list(cb.v ORDER BY codes.j)) AS rv
   FROM codes JOIN cb ON cb.j = codes.j AND cb.c = codes.c
   GROUP BY codes.vec_id),
 rn2 AS (SELECT vec_id, rv,
-        sqrt({ddot.format(a='rv', b='rv', d=dim)}) AS nrm FROM recon),
+        sqrt({_DDOT.format(a='rv', b='rv', d=dim)}) AS nrm FROM recon),
 q AS (SELECT vec_id, embedding,
-        sqrt({ddot.format(a='embedding', b='embedding', d=dim)}) AS nrm
+        sqrt({_DDOT.format(a='embedding', b='embedding', d=dim)}) AS nrm
       FROM e WHERE vec_id <= {max_query}),
 pairs AS (SELECT q.vec_id AS qid, c2.vec_id AS cid,
-    ROUND({ddot.format(a='q.embedding', b='c2.rv', d=dim)} / (q.nrm * c2.nrm), 4) + 0.0 AS cos
+    ROUND({_DDOT.format(a='q.embedding', b='c2.rv', d=dim)} / (q.nrm * c2.nrm), 4) + 0.0 AS cos
   FROM q CROSS JOIN rn2 c2 WHERE q.vec_id != c2.vec_id)
 SELECT 'pq' AS src, qid, cid, cos, rn FROM (
   SELECT qid, cid, cos, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rn FROM pairs) t
@@ -1158,13 +985,9 @@ WHERE ROUND({dot} / (a.nrm * b.nrm), 4) >= {thr}"""
         dot=_DOT.format(a="a.embedding", b="b.embedding"),
         lmax=left_max, rlo=right_lo, rhi=right_hi, thr=threshold,
     )
-    ddot = (
-        "list_sum(list_transform(range(1, {d} + 1), "
-        "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-    )
     duck = tmpl.format(
-        selfdot=ddot.format(a="embedding", b="embedding", d=dim),
-        dot=ddot.format(a="a.embedding", b="b.embedding", d=dim),
+        selfdot=_DDOT.format(a="embedding", b="embedding", d=dim),
+        dot=_DDOT.format(a="a.embedding", b="b.embedding", d=dim),
         lmax=left_max, rlo=right_lo, rhi=right_hi, thr=threshold,
     )
     return spark, duck
@@ -1181,15 +1004,14 @@ SELECT a.vec_id AS qid, b.vec_id AS cid,
 FROM n a JOIN n b ON a.vec_id < b.vec_id
 WHERE ROUND({_DOT.format(a='a.embedding', b='b.embedding')} / (a.nrm * b.nrm), 4) >= {threshold}
 ORDER BY qid, cid"""
-    ddot = "list_sum(list_transform(range(1, {d} + 1), i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
     duck = f"""
 WITH n AS (SELECT vec_id, embedding,
-             sqrt({ddot.format(a='embedding', b='embedding', d=dim)}) AS nrm
+             sqrt({_DDOT.format(a='embedding', b='embedding', d=dim)}) AS nrm
            FROM embeddings)
 SELECT a.vec_id AS qid, b.vec_id AS cid,
-  ROUND({ddot.format(a='a.embedding', b='b.embedding', d=dim)} / (a.nrm * b.nrm), 4) + 0.0 AS cos
+  ROUND({_DDOT.format(a='a.embedding', b='b.embedding', d=dim)} / (a.nrm * b.nrm), 4) + 0.0 AS cos
 FROM n a JOIN n b ON a.vec_id < b.vec_id
-WHERE ROUND({ddot.format(a='a.embedding', b='b.embedding', d=dim)} / (a.nrm * b.nrm), 4) >= {threshold}
+WHERE ROUND({_DDOT.format(a='a.embedding', b='b.embedding', d=dim)} / (a.nrm * b.nrm), 4) >= {threshold}
 ORDER BY qid, cid"""
     return spark, duck
 
@@ -1240,153 +1062,56 @@ def _ivf_sample_frame(
     return cand
 
 
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    sample: int = 10_000,
-    seed: int = 7,
-    centroids=None,
-) -> DataFrame:
-    """IVF ANN: k-means coarse quantizer → inverted lists → probe search.
-
-    Train ``n_lists`` centroids on a corpus sample (driver-side, seeded,
-    deterministic), assign every corpus vector to its nearest centroid
-    (one broadcast matmul per Arrow batch — the centroid table is KBs),
-    then for each query probe the ``n_probe`` nearest lists and re-rank
-    candidates by exact cosine.  Same pipeline shape as sign-LSH with
-    the signature swapped for a learned partition — recall/compute is
-    tuned by ``n_probe`` instead of prefix bits.
-
-    Scale: corpus assignment is a scan-side projection (no shuffle); the
-    probe join shuffles on ``list_id`` — candidates per query ≈
-    |corpus|·n_probe/n_lists.  At billions of vectors raise ``n_lists``
-    ~√N so lists stay ~√N-sized.
-
-    ``centroids``: pass an explicit (n_lists × dim) matrix to skip
-    training entirely — the IVF SEARCH path then has no learned state
-    and is SQL-expressible, which is how the driver gate hash-checks it
-    (``ivf_fixed_topk_duck_sql``; the k-means TRAINING stays
-    recall-tested, since iterative refinement is not SQL).  Centroid
-    similarities are rounded to 6 dp with lowest-index tie-break in
-    BOTH engines so assignment/probe order is bit-reproducible.
-    """
+def _training_sample(
+    corpus: DataFrame, id_col: str, vec_col: str, sample: int, seed: int
+):
+    """(≤ sample, dim) float64 matrix of the training sample: the
+    :func:`_ivf_sample_frame` rows, truncated driver-side by id."""
     import numpy as np
 
-    spark = queries.sparkSession
-    if centroids is not None:
-        cent = np.asarray(centroids, dtype=np.float64)
-        n_lists = cent.shape[0]
-    else:
-        samp = sorted(
-            _ivf_sample_frame(corpus, id_col, vec_col, sample, seed).collect(),
-            key=lambda r: r[0],
-        )[:sample]
-        mat = np.array([list(r[1]) for r in samp], dtype=np.float64)
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
-        cent = _kmeans(mat, n_lists, seed=seed)
-    bc = spark.sparkContext.broadcast(cent)
+    rows = sorted(
+        _ivf_sample_frame(corpus, id_col, vec_col, sample, seed).collect(),
+        key=lambda r: r[0],
+    )[:sample]
+    return np.array([list(r[1]) for r in rows], dtype=np.float64)
 
-    # Fixed-centroid (gated) path: centroid similarities must reproduce
-    # the SQL mirror bit-for-bit — sequential-fold dots and self-norm
-    # (cumsum, not BLAS matmul: pairwise SIMD order can flip a boundary
-    # round — the dq33/_sig_norm_pandas argument), half-up 6-dp round,
-    # then ROUND(dot/nrm, 6) in the same association as the SQL text.
-    # Learned path keeps the normalized matmul (no cross-engine claim).
-    exact_fold = centroids is not None
 
-    def _sims(v_raw, c):
-        import numpy as np
+def _train_centroids(mat, n_lists: int, seed: int):
+    """(n_lists, dim) unit-norm k-means centroids of a training sample."""
+    import numpy as np
 
-        if exact_fold:
-            prods = v_raw[:, None, :] * c[None, :, :]
-            dots = np.cumsum(prods, axis=2)[:, :, -1]
-            nrm = np.sqrt(np.cumsum(v_raw * v_raw, axis=1)[:, -1])
-            return _round_half_up(dots / np.maximum(nrm[:, None], 1e-30), 6)
-        v = v_raw / np.maximum(np.linalg.norm(v_raw, axis=1, keepdims=True), 1e-30)
-        return v @ c.T
+    norm = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
+    return _kmeans(norm, n_lists, seed=seed)
 
-    def assign_gen(batches):
-        import numpy as np
-        import pandas as pd
 
-        c = bc.value
-        for pdf in batches:
-            pdf = pdf[pdf["v"].map(lambda x: x is not None)]  # null guard
-            if not len(pdf):
-                continue
-            v = np.array([list(x) for x in pdf["v"]], dtype=np.float64)
-            yield pd.DataFrame(
-                {"id": pdf["id"], "list_id": np.argmax(_sims(v, c), axis=1), "v": pdf["v"]}
-            )
+def _write_artifact(spark, path: str, cols: dict, schema: str) -> None:
+    """Write a KB-sized driver-side index table (centroids, codebooks,
+    meta) as one parquet file.  The frame is built from pandas: a
+    Python-list frame round-trips through a pickled RDD and took ~4×
+    as long per write."""
+    import pandas as pd
 
-    def probe_gen(batches):
-        import numpy as np
-        import pandas as pd
+    spark.createDataFrame(pd.DataFrame(cols), schema).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path)
 
-        c = bc.value
-        for pdf in batches:
-            pdf = pdf[pdf["v"].map(lambda x: x is not None)]  # null guard
-            if not len(pdf):
-                continue
-            v = np.array([list(x) for x in pdf["v"]], dtype=np.float64)
-            sims = _sims(v, c)
-            # stable sort: ties resolve to the lowest list index, the
-            # same order the SQL mirror's (sim DESC, j ASC) produces
-            probes = np.argsort(-sims, axis=1, kind="stable")[
-                :, : min(n_probe, c.shape[0])
-            ]
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy().repeat(probes.shape[1]),
-                    "list_id": probes.reshape(-1),
-                    "v": [pdf["v"].iloc[i] for i in range(n) for _ in range(probes.shape[1])],
-                }
-            )
 
-    out_schema = f"id long, list_id int, v array<float>"
-    c_assigned = (
-        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .mapInPandas(assign_gen, out_schema)
-        .withColumnRenamed("id", "cid")
-        .withColumnRenamed("v", "cv")
-        .withColumn("cn", F.expr(_norm("cv")))
+def _write_centroids(spark, path: str, cent) -> None:
+    _write_artifact(
+        spark,
+        f"{path}/centroids",
+        {"list_id": range(len(cent)), "centroid": [list(map(float, c)) for c in cent]},
+        "list_id int, centroid array<double>",
     )
-    q_probed = (
-        queries.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .mapInPandas(probe_gen, out_schema)
-        .withColumnRenamed("id", "qid")
-        .withColumnRenamed("v", "qv")
-        .withColumn("qn", F.expr(_norm("qv")))
+
+
+def _read_centroids(spark, path: str):
+    import numpy as np
+
+    rows = sorted(
+        spark.read.parquet(f"{path}/centroids").collect(), key=lambda r: r["list_id"]
     )
-    pairs = (
-        q_probed.join(c_assigned, ["list_id"])
-        .filter(F.col("qid") != F.col("cid"))
-        .withColumn(
-            "cos",
-            F.round(
-                F.expr(_DOT.format(a="qv", b="cv")) / (F.col("qn") * F.col("cn")), 4
-            )
-            # + 0.0: negative-zero normalization (see cosine_topk).
-            + F.lit(0.0),
-        )
-        # A pair can meet in up to n_probe lists; dedupe BEFORE ranking,
-        # else duplicates occupy top-k slots and evict a genuine k-th
-        # neighbor (VERDICT r1 bug) — duplicate rows carry identical cos,
-        # so keeping an arbitrary one is exact.
-        .dropDuplicates(["qid", "cid"])
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("cid"))
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "cid", "cos", "rn")
-    )
+    return np.array([list(r["centroid"]) for r in rows], dtype=np.float64)
 
 
 def _quantize_assigned(assigned: DataFrame) -> DataFrame:
@@ -1397,14 +1122,14 @@ def _quantize_assigned(assigned: DataFrame) -> DataFrame:
     return assigned.select("cid", "list_id").join(q, "cid")
 
 
-def _dequantize_corpus(corpus: DataFrame, vec_col: str) -> DataFrame:
-    return corpus.select(
+def _dequantize_corpus(stored: DataFrame) -> DataFrame:
+    return stored.select(
         "cid",
         F.expr(
             "transform(qvec, q -> CAST(CAST(q AS DOUBLE) * scale AS FLOAT))"
-        ).alias(vec_col),
+        ).alias("cv"),
         "list_id",
-    ).withColumnRenamed("cid", "cid")
+    )
 
 
 def build_ivf_index(
@@ -1421,28 +1146,19 @@ def build_ivf_index(
     quantizer once, persist ``centroids.parquet`` (KBs) and the corpus
     assigned to inverted lists under ``corpus/`` PARTITIONED BY
     ``list_id`` — so a search probing ``n_probe`` of ``n_lists`` lists
-    reads only those partition directories (static pruning; the
-    train-per-call :func:`ivf_topk` re-scans the corpus every query
-    batch, the index amortizes both training and assignment).
+    reads only those partition directories (static pruning; the index
+    amortizes both training and assignment over every query batch).
 
-    Assignment runs through the same fixed-centroid fold-exact kernel
-    the search probes use (centroids passed explicitly), so
-    build-assignment and search-probe agree bit-for-bit.
+    Assignment runs through the fold-exact kernel the search probes use
+    (:func:`_centroid_sims`), and the search re-ranks the stored rows
+    under their stored ``list_id``, so build and search never disagree
+    about placement.
     """
-    import numpy as np
-
     spark = corpus.sparkSession
-    samp = sorted(
-        _ivf_sample_frame(corpus, id_col, vec_col, sample, seed).collect(),
-        key=lambda r: r[0],
-    )[:sample]
-    mat = np.array([list(r[1]) for r in samp], dtype=np.float64)
-    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
-    cent = _kmeans(mat, n_lists, seed=seed)
-    spark.createDataFrame(
-        [(int(j), [float(x) for x in cent[j]]) for j in range(len(cent))],
-        "list_id int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
+    cent = _train_centroids(
+        _training_sample(corpus, id_col, vec_col, sample, seed), n_lists, seed
+    )
+    _write_centroids(spark, path, cent)
     assigned = ivf_assign(corpus, cent, id_col, vec_col)
     if quantize:
         # int8 storage: 4x the vectors per byte of index (the
@@ -1459,14 +1175,13 @@ def ivf_assign(
     corpus: DataFrame, centroids, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
     """(cid, cv, list_id): nearest-centroid assignment with the
-    fold-exact kernel (cumsum dots, 6-dp half-up round, lowest-index
-    tie-break — identical to :func:`ivf_topk`'s fixed-centroid path, so
-    persisted lists and on-the-fly assignment never disagree)."""
+    fold-exact kernel (:func:`_centroid_sims`: cumsum dots, 6-dp half-up
+    round, lowest-index tie-break — the same rule the index probes use,
+    so persisted lists and on-the-fly assignment never disagree)."""
     import numpy as np
 
     spark = corpus.sparkSession
-    cent = np.asarray(centroids, dtype=np.float64)
-    bc = spark.sparkContext.broadcast(cent)
+    bc = spark.sparkContext.broadcast(np.asarray(centroids, dtype=np.float64))
 
     def gen(batches):
         import numpy as np
@@ -1480,15 +1195,11 @@ def ivf_assign(
             if not len(pdf):
                 continue
             v = np.array([list(x) for x in pdf["cv"]], dtype=np.float64)
-            prods = v[:, None, :] * c[None, :, :]
-            dots = np.cumsum(prods, axis=2)[:, :, -1]
-            nrm = np.sqrt(np.cumsum(v * v, axis=1)[:, -1])
-            sims = _round_half_up(dots / np.maximum(nrm[:, None], 1e-30), 6)
             yield pd.DataFrame(
                 {
                     "cid": pdf["cid"],
                     "cv": pdf["cv"],
-                    "list_id": np.argmax(sims, axis=1).astype(np.int32),
+                    "list_id": np.argmax(_centroid_sims(v, c), axis=1).astype(np.int32),
                 }
             )
 
@@ -1500,9 +1211,7 @@ def ivf_assign(
 def _delete_list_partitions(spark, base: str, list_ids) -> None:
     """Remove ``list_id=<n>`` partition directories via the Hadoop
     FileSystem API (works for any scheme the session can write, not just
-    local paths).  Used by :func:`update_ivf_index` to purge dirty lists
-    that received zero output rows — dynamic partition overwrite never
-    touches a partition absent from the output."""
+    local paths)."""
     if not list_ids:
         return
     jvm = spark._jvm
@@ -1513,119 +1222,21 @@ def _delete_list_partitions(spark, base: str, list_ids) -> None:
         fs.delete(p, True)
 
 
-def update_ivf_index(
-    corpus_delta: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Fold new/changed vectors into a persisted IVF index WITHOUT
-    retraining: assign the delta with the stored centroids (the same
-    fold-exact kernel — new vectors land exactly where a full rebuild
-    would put them) and keyed-upsert into the list-partitioned corpus,
-    so re-ingested ids replace their old row and a replayed delta is
-    idempotent.  Only the delta's list partitions rewrite
+def _upsert_lists(spark, base: str, delta: DataFrame) -> None:
+    """Keyed upsert of ``delta`` (``cid``, ``list_id``, payload) into the
+    table at ``base`` PARTITIONED BY ``list_id``: re-ingested ids
+    replace their old row, new ids append, and only dirty lists rewrite
     (``catalog.upsert_table`` dirty-partition discipline).
 
-    A CHANGED vector may re-assign to a different list; the old row
+    A CHANGED vector may re-assign to a different list; its old row
     lives in another partition, so the dirty set is the union of the
-    delta's NEW lists and the OLD lists its ids currently occupy (one
-    ids+list_id column-pruned pass over the corpus finds them).  Those
-    partitions are rewritten with the delta's ids replaced — replaying
-    the same delta is idempotent.
-
-    Centroids drift as the corpus grows — recall against the trained
-    distribution degrades slowly; rebuild via :func:`build_ivf_index`
-    when the corpus has grown by an order of magnitude (the standard
-    IVF maintenance trade).
+    delta's NEW lists and the OLD lists its ids occupy (one
+    ids+list_id column-pruned pass over the table finds them).  Those
+    partitions are rewritten as survivors ∪ delta with a per-write
+    dynamic overwrite, so replaying the same delta is idempotent.
     """
-    import numpy as np
-
-    spark = corpus_delta.sparkSession
-    cent = np.array(
-        [
-            r["centroid"]
-            for r in sorted(
-                spark.read.parquet(f"{path}/centroids").collect(),
-                key=lambda r: r["list_id"],
-            )
-        ],
-        dtype=np.float64,
-    )
-    assigned = ivf_assign(corpus_delta, cent, id_col, vec_col)
-    existing = spark.read.parquet(f"{path}/corpus")
-    if "qvec" in existing.columns:  # int8 index: delta stores int8 too
-        assigned = _quantize_assigned(assigned)
-    assigned = assigned.localCheckpoint(eager=True)
-    delta_keys = assigned.select("cid").distinct()
-    old_lists = (
-        existing.join(delta_keys, "cid", "semi").select("list_id").distinct()
-    )
-    dirty = [
-        r["list_id"]
-        for r in old_lists.unionByName(
-            assigned.select("list_id").distinct()
-        ).distinct().collect()
-    ]
-    survivors = (
-        existing.filter(F.col("list_id").isin(dirty))
-        .join(delta_keys, "cid", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    # Per-write dynamic overwrite (ADVICE r6 low): the session conf must
-    # not leak to later unrelated partitioned overwrites.
-    survivors.unionByName(assigned).write.partitionBy("list_id").mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "dynamic").parquet(f"{path}/corpus")
-    # ADVICE r6 high: dynamic overwrite only rewrites partitions PRESENT
-    # in the output.  A dirty list whose every row moved out (or was
-    # replaced into another list) contributes zero output rows, so its
-    # directory would keep the stale copy — the moved vector then
-    # answers searches from BOTH lists, violating the replace
-    # invariant.  Those now-empty dirty lists are deleted explicitly
-    # AFTER the successful write (write-failure leaves the index
-    # untouched; delete-failure leaves exactly the pre-fix state).
-    written = {
-        r["list_id"]
-        for r in survivors.select("list_id")
-        .unionByName(assigned.select("list_id"))
-        .distinct()
-        .collect()
-    }
-    _delete_list_partitions(spark, f"{path}/corpus",
-                            [l for l in dirty if l not in written])
-
-
-def update_ivfpq_index(
-    corpus_delta: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Fold new/changed vectors into a persisted IVF×PQ index WITHOUT
-    retraining: encode the delta with the STORED codebooks and assign
-    with the STORED centroids (new vectors land exactly where a full
-    rebuild with those artifacts would put them), then keyed-upsert
-    into the list-partitioned codes table — same dirty-partition
-    discipline as :func:`update_ivf_index`, including the
-    empty-dirty-list purge (a sole-occupant vector moving lists must
-    not stay searchable in its old list) and replay idempotency.
-
-    Codebook/centroid drift mirrors the IVF maintenance trade: rebuild
-    via :func:`build_ivfpq_index` when the corpus has grown an order of
-    magnitude past the training sample.
-    """
-    spark = corpus_delta.sparkSession
-    cent, books, residual = _read_ivfpq_artifacts(spark, path)
-    if residual:
-        delta = pq_encode_residual(corpus_delta, cent, books, id_col, vec_col)
-    else:
-        delta = pq_encode(corpus_delta, books, id_col, vec_col).join(
-            ivf_assign(corpus_delta, cent, id_col, vec_col).select("cid", "list_id"),
-            "cid",
-        )
     delta = delta.localCheckpoint(eager=True)
-    existing = spark.read.parquet(f"{path}/codes")
+    existing = spark.read.parquet(base)
     delta_keys = delta.select("cid").distinct()
     old_lists = existing.join(delta_keys, "cid", "semi").select("list_id").distinct()
     dirty = [
@@ -1639,9 +1250,20 @@ def update_ivfpq_index(
         .join(delta_keys, "cid", "left_anti")
         .localCheckpoint(eager=True)
     )
+    # Per-write dynamic overwrite (ADVICE r6 low): the session conf must
+    # not leak to later unrelated partitioned overwrites.
     survivors.unionByName(delta).write.partitionBy("list_id").mode(
         "overwrite"
-    ).option("partitionOverwriteMode", "dynamic").parquet(f"{path}/codes")
+    ).option("partitionOverwriteMode", "dynamic").parquet(base)
+    # ADVICE r6 high: dynamic overwrite only rewrites partitions PRESENT
+    # in the output.  A dirty list whose every row moved out (or was
+    # replaced into another list) contributes zero output rows, so its
+    # directory would keep the stale copy — the moved vector then
+    # answers searches from BOTH lists, violating the replace
+    # invariant.  Those now-empty dirty lists are deleted explicitly
+    # AFTER the successful write (write-failure leaves the index
+    # untouched; delete-failure leaves exactly the pre-purge state,
+    # which a replay of the delta heals).
     written = {
         r["list_id"]
         for r in survivors.select("list_id")
@@ -1649,9 +1271,33 @@ def update_ivfpq_index(
         .distinct()
         .collect()
     }
-    _delete_list_partitions(
-        spark, f"{path}/codes", [l for l in dirty if l not in written]
-    )
+    _delete_list_partitions(spark, base, [l for l in dirty if l not in written])
+
+
+def update_ivf_index(
+    corpus_delta: DataFrame,
+    path: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> None:
+    """Fold new/changed vectors into a persisted IVF index WITHOUT
+    retraining: assign the delta with the stored centroids (the same
+    fold-exact kernel — new vectors land exactly where a full rebuild
+    would put them) and keyed-upsert it into the list-partitioned
+    corpus (:func:`_upsert_lists`: changed ids replace their old row
+    even across lists, a replayed delta is idempotent, emptied lists
+    are purged).
+
+    Centroids drift as the corpus grows — recall against the trained
+    distribution degrades slowly; rebuild via :func:`build_ivf_index`
+    when the corpus has grown by an order of magnitude (the standard
+    IVF maintenance trade).
+    """
+    spark = corpus_delta.sparkSession
+    assigned = ivf_assign(corpus_delta, _read_centroids(spark, path), id_col, vec_col)
+    if "qvec" in spark.read.parquet(f"{path}/corpus").columns:
+        assigned = _quantize_assigned(assigned)  # int8 index: delta stores int8 too
+    _upsert_lists(spark, f"{path}/corpus", assigned)
 
 
 def ivf_search(
@@ -1662,66 +1308,66 @@ def ivf_search(
     vec_col: str = "embedding",
     n_probe: int = 4,
 ) -> DataFrame:
-    """Search a persisted IVF index: probe each query's ``n_probe``
-    nearest lists, read ONLY those list partitions (the probed list ids
-    are collected — at most ``n_lists`` ints — and pushed as a partition
-    filter, so the scan prunes directories), exact-cosine re-rank.
+    """Search a persisted IVF index: (qid, cid, cos, rn) with rn ≤ k.
 
-    Equals :func:`ivf_topk` run with the index's centroids — pinned in
-    tests — while scanning |corpus|·n_probe/n_lists instead of the
-    whole corpus."""
+    Each query probes its ``n_probe`` nearest lists once (the
+    fold-exact :func:`_probe`, distributed over the query frame); the
+    probed list ids — at most ``n_lists`` ints — come back to the driver
+    and are pushed as a partition filter, so the corpus scan reads only
+    those directories.  Query and stored rows join on the STORED
+    ``list_id`` and re-rank by the exact 4-dp rounded cosine.  A corpus
+    row lives in exactly one list and a query probes distinct lists, so
+    each (qid, cid) pair meets at most once.  Rows with a NULL or
+    zero-norm embedding drop, so with ``n_probe`` ≥ ``n_lists`` the
+    result equals :func:`cosine_topk` (pinned in tests).
+
+    An int8 index (``quantize=True``) dequantizes scan-side; only the
+    re-rank values carry the quantization drift, never the placement.
+    """
     spark = queries.sparkSession
-    cent_rows = sorted(
-        spark.read.parquet(f"{index_path}/centroids").collect(),
-        key=lambda r: r["list_id"],
-    )
-    import numpy as np
+    bc = spark.sparkContext.broadcast(_read_centroids(spark, index_path))
 
-    cent = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    q = queries.select(F.col(id_col).alias(id_col), F.col(vec_col).alias(vec_col))
-    # Probed-list set, computed distributively (only list ids — at most
-    # n_lists ints — come back to the driver), then pushed as a
-    # partition filter so the corpus scan prunes directories.
-    bc = spark.sparkContext.broadcast(cent)
-
-    def probe_lists(batches):
+    def probe(batches):
         import numpy as np
         import pandas as pd
 
         c = bc.value
         for pdf in batches:
-            pdf = pdf[pdf["v"].map(lambda x: x is not None)]  # null guard
+            pdf = pdf[pdf["qv"].map(lambda x: x is not None)]  # null guard
             if not len(pdf):
                 continue
-            v = np.array([list(x) for x in pdf["v"]], dtype=np.float64)
-            prods = v[:, None, :] * c[None, :, :]
-            dots = np.cumsum(prods, axis=2)[:, :, -1]
-            nrm = np.sqrt(np.cumsum(v * v, axis=1)[:, -1])
-            sims = _round_half_up(dots / np.maximum(nrm[:, None], 1e-30), 6)
-            top = np.argsort(-sims, axis=1, kind="stable")[
-                :, : min(n_probe, c.shape[0])
-            ]
-            yield pd.DataFrame({"list_id": np.unique(top).astype(np.int32)})
+            v = np.array([list(x) for x in pdf["qv"]], dtype=np.float64)
+            lists = _probe(v, c, n_probe)
+            w = lists.shape[1]
+            yield pd.DataFrame(
+                {
+                    "qid": pdf["qid"].to_numpy().repeat(w),
+                    "qv": pdf["qv"].repeat(w).to_numpy(),
+                    "list_id": lists.reshape(-1).astype(np.int32),
+                }
+            )
 
-    lists = sorted(
-        r["list_id"]
-        for r in q.select(F.col(vec_col).alias("v"))
-        .mapInPandas(probe_lists, "list_id int")
-        .distinct()
-        .collect()
+    q_type = queries.schema[vec_col].dataType.simpleString()
+    probed = (
+        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
+        .mapInPandas(probe, f"qid long, qv {q_type}, list_id int")
+        # materialized by the list-id collect below, reused by the join
+        .localCheckpoint(eager=False)
     )
+    lists = sorted(r["list_id"] for r in probed.select("list_id").distinct().collect())
     stored = spark.read.parquet(f"{index_path}/corpus").filter(
         F.col("list_id").isin(lists)
     )
     if "qvec" in stored.columns:  # int8 index: dequantize scan-side
-        stored = _dequantize_corpus(stored, "cv")
-    corpus = stored.select(
-        F.col("cid").alias(id_col), F.col("cv").alias(vec_col)
+        stored = _dequantize_corpus(stored)
+    pairs = (
+        probed.withColumn("qn", F.expr(_norm("qv")))
+        .join(stored.withColumn("cn", F.expr(_norm("cv"))), "list_id")
+        .filter(F.col("qid") != F.col("cid"))
+        .withColumn("cos", _cos())
+        .filter(F.col("cos").isNotNull())  # zero-norm rows drop, as in cosine_topk
     )
-    return ivf_topk(
-        q, corpus, id_col=id_col, vec_col=vec_col, k=k,
-        n_probe=n_probe, centroids=cent,
-    )
+    return _top_k(pairs, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1747,56 +1393,33 @@ def semantic_dedupe(
     embedding space, so restricting the quadratic comparison to cluster
     members turns all-pairs O(n²) into Σ|cluster|² — linear overall
     when ``n_clusters`` scales ~√N (raise it with corpus size exactly
-    like ``ivf_topk``'s lists).  Cross-cluster near-dups are the
+    like an IVF index's lists).  Cross-cluster near-dups are the
     documented recall loss of the method (boundary pairs); lowering
     ``threshold`` or raising ``n_probe``-style replication is the knob,
     not an all-pairs fallback.
 
-    Per cluster the pairwise test is ONE numpy/BLAS matmul in
-    ``applyInPandas`` (the cogroup-block trick from
-    :func:`cosine_near_dup_pairs` with shard = learned cluster).
-    Deterministic end to end: seeded sample + seeded k-means (the IVF
-    quantizer), 4-dp-rounded cosines, min-id keep.
+    Clusters are the IVF lists: the IVF quantizer's centroids and
+    :func:`ivf_assign`, which skips NULL embeddings — a row with no
+    vector is never compared, so it is kept.  Per cluster the pairwise
+    test is ONE numpy/BLAS matmul in ``applyInPandas`` (the cogroup-block
+    trick from :func:`cosine_near_dup_pairs` with shard = learned
+    cluster).  Deterministic end to end: seeded sample + seeded k-means,
+    fold-exact assignment, 4-dp-rounded cosines, min-id keep.
     """
-    import numpy as np
-
-    spark = df.sparkSession
-    samp = sorted(
-        _ivf_sample_frame(df, id_col, vec_col, sample, seed).collect(),
-        key=lambda r: r[0],
-    )[:sample]
-    mat = np.array([list(r[1]) for r in samp], dtype=np.float64)
-    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
-    cent = _kmeans(mat, n_clusters, seed=seed)
-    bc = spark.sparkContext.broadcast(cent)
-
-    def assign_gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        c = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            v = np.array([list(x) for x in pdf["v"]], dtype=np.float64)
-            v /= np.maximum(np.linalg.norm(v, axis=1, keepdims=True), 1e-30)
-            yield pd.DataFrame(
-                {"id": pdf["id"], "list_id": np.argmax(v @ c.T, axis=1), "v": pdf["v"]}
-            )
-
-    assigned = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    ).mapInPandas(assign_gen, "id long, list_id int, v array<float>")
+    cent = _train_centroids(
+        _training_sample(df, id_col, vec_col, sample, seed), n_clusters, seed
+    )
+    assigned = ivf_assign(df, cent, id_col, vec_col)
 
     def drop_in_cluster(pdf):
         import numpy as np
         import pandas as pd
 
         if len(pdf) < 2:
-            return pd.DataFrame({"id": []}).astype({"id": "int64"})[0:0]
-        pdf = pdf.sort_values("id")
-        ids = pdf["id"].to_numpy(np.int64)
-        m = np.array([list(x) for x in pdf["v"]], dtype=np.float64)
+            return pd.DataFrame({"id": np.array([], dtype=np.int64)})
+        pdf = pdf.sort_values("cid")
+        ids = pdf["cid"].to_numpy(np.int64)
+        m = np.array([list(x) for x in pdf["cv"]], dtype=np.float64)
         m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-30)
         sims = np.round(m @ m.T, 4)
         # drop j if any i < j has sims >= threshold (min-id keeps)
@@ -1890,6 +1513,7 @@ def train_pq(
     vec_col: str = "embedding",
     sample: int = 10_000,
     seed: int = 7,
+    centroids=None,
 ):
     """Train product-quantization codebooks: split the vector into ``m``
     contiguous subvectors and learn ``k`` L2 codewords per subspace on
@@ -1903,17 +1527,28 @@ def train_pq(
     query (ADC — asymmetric distance computation).  Compose with IVF
     for the canonical billion-vector design: coarse cells prune the
     corpus, PQ codes score the survivors without touching raw vectors.
+
+    With IVF ``centroids``, the codebooks are trained on RESIDUALS
+    ``v − centroid[assign(v)]`` (assignment by :func:`_centroid_sims`)
+    — the canonical IVFADC design (Jégou et al., "Product Quantization
+    for Nearest Neighbor Search"): residuals are small and centered, so
+    the same bit budget resolves much finer structure than raw-vector
+    codebooks.
     """
+    mat = _training_sample(corpus, id_col, vec_col, sample, seed)
+    return _train_codebooks(mat, m, k, seed, centroids)
+
+
+def _train_codebooks(mat, m: int, k: int, seed: int, centroids=None):
+    """:func:`train_pq` over an already collected training sample."""
     import numpy as np
 
-    samp = sorted(
-        _ivf_sample_frame(corpus, id_col, vec_col, sample, seed).collect(),
-        key=lambda r: r[0],
-    )[:sample]
-    mat = np.array([list(r[1]) for r in samp], dtype=np.float64)
     dim = mat.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
+    if centroids is not None:
+        cent = np.asarray(centroids, dtype=np.float64)
+        mat = mat - cent[np.argmax(_centroid_sims(mat, cent), axis=1)]
     d_sub = dim // m
     return np.stack(
         [
@@ -1928,239 +1563,63 @@ def pq_encode(
     codebooks,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    centroids=None,
 ) -> DataFrame:
     """(cid, codes): nearest codeword per subspace — scan-side Arrow
     kernel (one broadcast of the KB-sized codebooks, zero shuffles;
-    null embeddings dropped per the registry-wide null-guard rule)."""
+    null embeddings dropped per the registry-wide null-guard rule).
+
+    With IVF ``centroids``: (cid, list_id, codes) — each vector is
+    assigned to its list (:func:`_centroid_sims`, the rule of
+    :func:`ivf_assign`) and its residual ``v − centroid[list]`` is coded
+    in the same pass, so a residual codes table costs one corpus scan
+    and zero joins."""
+    return _pq_codes(corpus, codebooks, centroids, centroids is not None, id_col, vec_col)
+
+
+def _pq_codes(corpus, codebooks, centroids, residual: bool, id_col, vec_col):
+    """The one PQ encode kernel behind :func:`pq_encode` and the IVF×PQ
+    index: with ``centroids`` each vector is also assigned to its list
+    (``list_id``), and with ``residual`` its residual is what is coded —
+    either layout's codes table costs one corpus scan."""
     import numpy as np
 
     spark = corpus.sparkSession
     cb = np.asarray(codebooks, dtype=np.float64)
-    bc = spark.sparkContext.broadcast(cb)
+    cent = None if centroids is None else np.asarray(centroids, dtype=np.float64)
+    bc = spark.sparkContext.broadcast((cent, cb))
 
     def gen(batches):
         import numpy as np
         import pandas as pd
 
-        books = bc.value
+        cents, books = bc.value
         m, _k, d_sub = books.shape
         for pdf in batches:
             pdf = pdf[pdf["v"].map(lambda x: x is not None)]
             if not len(pdf):
                 continue
             mat = np.array([list(x) for x in pdf["v"]], dtype=np.float64)
+            out = {"cid": pdf["id"]}
+            if cents is not None:
+                lists = np.argmax(_centroid_sims(mat, cents), axis=1)
+                if residual:
+                    mat = mat - cents[lists]
+                out["list_id"] = lists.astype(np.int32)
             codes = np.empty((len(mat), m), dtype=np.uint8)
             for j in range(m):
                 sub = mat[:, j * d_sub : (j + 1) * d_sub]
                 d2 = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
                 codes[:, j] = np.argmin(d2, axis=1)
-            yield pd.DataFrame(
-                {"cid": pdf["id"], "codes": [c.tolist() for c in codes]}
-            )
+            out["codes"] = [c.tolist() for c in codes]
+            yield pd.DataFrame(out)
 
+    schema = "cid long, codes array<smallint>"
+    if cent is not None:
+        schema = "cid long, list_id int, codes array<smallint>"
     return corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    ).mapInPandas(gen, "cid long, codes array<smallint>")
-
-
-def pq_topk(
-    queries: DataFrame,
-    codes: DataFrame,
-    codebooks,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    refine_with: DataFrame | None = None,
-    refine_factor: int = 4,
-) -> DataFrame:
-    """Approximate cosine top-k over PQ codes via ADC: per query build
-    the ``(m, k_codes)`` dot-product lookup table once, score every
-    code row with ``m`` table lookups (never reconstructing vectors),
-    keep a per-partition top-k, then resolve globally.
-
-    Shuffle budget: the CODES corpus never moves (scan-side scoring
-    against broadcast queries + codebooks); only ``k`` candidate rows
-    per (query, partition) reach the final window — the same partial
-    top-k discipline as an aggregation's map-side combine.
-
-    Quantization erases within-cluster distinctions (the codes carry
-    ~noise-scale reconstruction error by design), so ADC alone ranks
-    the right NEIGHBORHOOD but not reliably the exact nearest row.
-    Pass ``refine_with`` (the original-vector corpus) to re-rank the
-    top ``k·refine_factor`` ADC candidates with exact rounded cosine —
-    the classic IVFADC+R design: the shortlist is Q·k·factor rows,
-    broadcast to the corpus scan, so the refine costs one broadcast
-    semi-join instead of a corpus shuffle.  Approximate ≠ hash-gateable:
-    recall vs exact :func:`cosine_topk` is pinned in tests (ADC-only at
-    recall@10, refined at recall@1 — the op_ann_topk posture).
-    """
-    import numpy as np
-
-    spark = queries.sparkSession
-    cb = np.asarray(codebooks, dtype=np.float64)
-    m, _kc, d_sub = cb.shape
-    q_rows = sorted(
-        (int(r[0]), np.asarray(list(r[1]), dtype=np.float64))
-        for r in queries.select(id_col, vec_col).collect()
-        if r[1] is not None
-    )
-    if not q_rows:
-        raise ValueError("pq_topk: no non-null query vectors")
-    q_ids = np.array([q[0] for q in q_rows], dtype=np.int64)
-    q_mat = np.stack([q[1] for q in q_rows])
-    # Per-query ADC tables: lut[q, j, c] = dot(q_sub_j, codeword_{j,c}).
-    # dot(q, reconstruct(codes)) = Σ_j lut[q, j, codes_j] — m lookups,
-    # never touching a dim-D vector at scoring time.
-    luts = np.einsum("qjd,jkd->qjk", q_mat.reshape(len(q_mat), m, d_sub), cb)
-    code_norm2 = (cb**2).sum(axis=2)  # (m, k_codes): ||codeword||² per subspace
-    q_norm = np.sqrt((q_mat**2).sum(axis=1))
-    bq = spark.sparkContext.broadcast((q_ids, luts, code_norm2, q_norm))
-    # per-partition candidate width: the refine stage re-ranks the top
-    # k·refine_factor ADC rows, so the partial top-k must keep that many;
-    # +1 so dropping a self-match (cid == qid) still leaves enough.
-    keep = (k * refine_factor if refine_with is not None else k) + 1
-
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        ids, lut, cn2, qn = bq.value
-        n_q, mm, _ = lut.shape
-        j_idx = np.arange(mm)
-        parts: list[pd.DataFrame] = []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            c_ids = pdf["cid"].to_numpy(np.int64)
-            codes_m = np.array(pdf["codes"].tolist(), dtype=np.int64)  # (n, m)
-            # lut[:, j, codes[:, j]] broadcast over rows → (n_q, n, m)
-            dots = lut[:, j_idx, codes_m].sum(axis=2)  # (n_q, n)
-            c_norm = np.sqrt(cn2[j_idx, codes_m].sum(axis=1))  # (n,)
-            sims = dots / np.maximum(qn[:, None] * c_norm[None, :], 1e-30)
-            sims = _round_half_up(sims, 4) + 0.0
-            top = min(keep, sims.shape[1])
-            for qi in range(n_q):
-                order = np.lexsort((c_ids, -sims[qi]))[:top]
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "qid": ids[qi],
-                            "cid": c_ids[order],
-                            "score": sims[qi][order],
-                        }
-                    )
-                )
-        if parts:
-            # per-partition combine: only keep rows per (query, partition)
-            all_p = pd.concat(parts, ignore_index=True)
-            all_p = (
-                all_p.sort_values(["qid", "score", "cid"], ascending=[True, False, True])
-                .groupby("qid", sort=False)
-                .head(keep)
-            )
-            yield all_p
-        else:
-            yield pd.DataFrame({"qid": pd.Series(dtype="int64"),
-                                "cid": pd.Series(dtype="int64"),
-                                "score": pd.Series(dtype="float64")})
-
-    cand = codes.mapInPandas(score, "qid long, cid long, score double")
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("cid"))
-    adc = (
-        cand.filter(F.col("cid") != F.col("qid"))
-        .withColumn("rn", F.row_number().over(w))
-    )
-    if refine_with is None:
-        return adc.filter(F.col("rn") <= k).select("qid", "cid", "score", "rn")
-
-    # IVFADC+R refine: exact rounded cosine over the tiny ADC shortlist.
-    # The shortlist (Q·k·factor rows) broadcasts; the corpus never shuffles.
-    shortlist = adc.filter(F.col("rn") <= k * refine_factor).select("qid", "cid")
-    c = refine_with.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
-    ).withColumn("cn", F.expr(_norm("cv")))
-    q = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).withColumn("qn", F.expr(_norm("qv")))
-    exact = (
-        c.join(F.broadcast(shortlist), "cid")
-        .join(F.broadcast(q), "qid")
-        .withColumn(
-            "score",
-            F.round(
-                F.expr(_DOT.format(a="qv", b="cv")) / (F.col("qn") * F.col("cn")), 4
-            )
-            + F.lit(0.0),
-        )
-    )
-    w2 = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("cid"))
-    return (
-        exact.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .select("qid", "cid", "score", "rn")
-    )
-
-
-def ivf_pq_topk(
-    queries: DataFrame,
-    coded: DataFrame,
-    centroids,
-    codebooks,
-    k: int = 3,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    refine_with: DataFrame | None = None,
-    refine_factor: int = 4,
-) -> DataFrame:
-    """IVF×PQ — the canonical billion-vector composition: the IVF coarse
-    quantizer prunes to ``nprobe`` inverted lists (a ``list_id IN (...)``
-    filter, static partition pruning against a
-    ``partitionBy("list_id")`` layout — the plan the :func:`ivf_topk`
-    tests assert), then PQ/ADC scores only the surviving codes (m bytes
-    per vector in memory, m table lookups per score).
-
-    ``coded`` is :func:`pq_encode` joined to :func:`ivf_assign` at build
-    time — columns ``(cid, list_id, codes)`` — amortized over every
-    query batch.  ``centroids`` is the trained (n_lists × dim) matrix.
-
-    At 10⁹ × 64-dim float32 the raw corpus is 256 GB; IVF×PQ scans
-    nprobe/nlist of it as m-byte codes — the difference between
-    "fits in the page cache" and "re-reads the corpus every query".
-    """
-    import numpy as np
-
-    c_mat = np.asarray(centroids, dtype=np.float64)
-    c_mat = c_mat / np.maximum(np.sqrt((c_mat**2).sum(axis=1))[:, None], 1e-30)
-
-    q_rows = [
-        (int(r[0]), np.asarray(list(r[1]), dtype=np.float64))
-        for r in queries.select(id_col, vec_col).collect()
-        if r[1] is not None
-    ]
-    if not q_rows:
-        raise ValueError("ivf_pq_topk: no non-null query vectors")
-    probed: set[int] = set()
-    idx = np.arange(len(c_mat))
-    for _qid, qv in q_rows:
-        qn = qv / max(float(np.sqrt((qv**2).sum())), 1e-30)
-        sims = c_mat @ qn
-        for pos in np.lexsort((idx, -sims))[:nprobe]:
-            probed.add(int(pos))
-
-    survivors = coded.filter(F.col("list_id").isin(sorted(probed))).select(
-        "cid", "codes"
-    )
-    return pq_topk(
-        queries,
-        survivors,
-        codebooks,
-        k=k,
-        id_col=id_col,
-        vec_col=vec_col,
-        refine_with=refine_with,
-        refine_factor=refine_factor,
-    )
+    ).mapInPandas(gen, schema)
 
 
 def kmeans_fixed(
@@ -2295,248 +1754,6 @@ ORDER BY qid, cid"""
     )
 
 
-def train_pq_residual(
-    corpus: DataFrame,
-    centroids,
-    m: int = 8,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample: int = 10_000,
-    seed: int = 7,
-):
-    """PQ codebooks trained on IVF RESIDUALS (``v − centroid[assign(v)]``)
-    — the canonical IVFADC design (Jégou et al., "Product Quantization
-    for Nearest Neighbor Search"): residuals are small and centered, so
-    the same bit budget resolves much finer structure than raw-vector
-    codebooks.  Sample + assignment run driver-side on the content-hash
-    sample (KB-scale artifacts out)."""
-    import numpy as np
-
-    cent = np.asarray(centroids, dtype=np.float64)
-    samp = sorted(
-        _ivf_sample_frame(corpus, id_col, vec_col, sample, seed).collect(),
-        key=lambda r: r[0],
-    )[:sample]
-    mat = np.array([list(r[1]) for r in samp], dtype=np.float64)
-    dim = mat.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    norm = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
-    cn = cent / np.maximum(np.linalg.norm(cent, axis=1, keepdims=True), 1e-30)
-    assign = np.argmax(norm @ cn.T, axis=1)
-    resid = mat - cent[assign]
-    d_sub = dim // m
-    return np.stack(
-        [
-            _kmeans_l2(resid[:, j * d_sub : (j + 1) * d_sub], k, seed=seed + j)
-            for j in range(m)
-        ]
-    )
-
-
-def pq_encode_residual(
-    corpus: DataFrame,
-    centroids,
-    codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(cid, list_id, codes): FUSED coarse-assign + residual-encode in
-    one scan-side Arrow kernel — the vector is assigned to its nearest
-    centroid (same cosine-argmax rule as :func:`ivf_assign`'s kernel)
-    and its residual ``v − centroid`` is PQ-coded in the same pass, so
-    building the codes table costs one corpus scan and zero joins
-    (the raw-vector path needs pq_encode ⋈ ivf_assign)."""
-    import numpy as np
-
-    spark = corpus.sparkSession
-    cent = np.asarray(centroids, dtype=np.float64)
-    cb = np.asarray(codebooks, dtype=np.float64)
-    bc = spark.sparkContext.broadcast((cent, cb))
-
-    def gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        cents, books = bc.value
-        cn = cents / np.maximum(
-            np.sqrt((cents**2).sum(axis=1))[:, None], 1e-30
-        )
-        m, _kc, d_sub = books.shape
-        for pdf in batches:
-            pdf = pdf[pdf["v"].map(lambda x: x is not None)]
-            if not len(pdf):
-                continue
-            mat = np.array([list(x) for x in pdf["v"]], dtype=np.float64)
-            nrm = np.sqrt((mat**2).sum(axis=1))
-            assign = np.argmax(
-                (mat / np.maximum(nrm[:, None], 1e-30)) @ cn.T, axis=1
-            )
-            resid = mat - cents[assign]
-            codes = np.empty((len(mat), m), dtype=np.uint8)
-            for j in range(m):
-                sub = resid[:, j * d_sub : (j + 1) * d_sub]
-                d2 = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = np.argmin(d2, axis=1)
-            yield pd.DataFrame(
-                {
-                    "cid": pdf["id"],
-                    "list_id": assign.astype(np.int32),
-                    "codes": [c.tolist() for c in codes],
-                }
-            )
-
-    return corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    ).mapInPandas(gen, "cid long, list_id int, codes array<smallint>")
-
-
-def pq_residual_topk(
-    queries: DataFrame,
-    coded: DataFrame,
-    centroids,
-    codebooks,
-    k: int = 3,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    refine_with: DataFrame | None = None,
-    refine_factor: int = 4,
-) -> DataFrame:
-    """Residual-PQ ADC search: cosine(q, v̂) where
-    ``v̂ = centroid[list] + recon(codes)`` decomposes into pure table
-    lookups —
-
-    - ``dot(q, v̂) = dot(q, cent_l) + Σⱼ lut[q, j, codeⱼ]`` with the lut
-      built from the query (not its residual: the dot is linear),
-    - ``‖v̂‖² = ‖cent_l‖² + 2·Σⱼ clut[l, j, codeⱼ] + Σⱼ cn2[j, codeⱼ]``
-      with ``clut[l, j, c] = dot(cent_l_subⱼ, codeword)`` precomputed
-      driver-side ((n_lists, m, k) — KBs).
-
-    The codes corpus never moves; the kernel keeps ``list_id`` so each
-    row uses its own list's tables.  Scores carry quantization error on
-    BOTH the dot and the norm — recall pinned in tests; ``refine_with``
-    gives the IVFADC+R exact re-rank like :func:`pq_topk`.
-    """
-    import numpy as np
-
-    spark = queries.sparkSession
-    cent = np.asarray(centroids, dtype=np.float64)
-    cb = np.asarray(codebooks, dtype=np.float64)
-    m, _kc, d_sub = cb.shape
-    q_rows = [
-        (int(r[0]), np.asarray(list(r[1]), dtype=np.float64))
-        for r in queries.select(id_col, vec_col).collect()
-        if r[1] is not None
-    ]
-    if not q_rows:
-        raise ValueError("pq_residual_topk: no non-null query vectors")
-    q_rows.sort(key=lambda t: t[0])
-    q_ids = np.array([a for a, _ in q_rows], dtype=np.int64)
-    q_mat = np.stack([b for _, b in q_rows])
-    q_nrm = np.sqrt((q_mat**2).sum(axis=1))
-
-    c_nrm = np.maximum(np.sqrt((cent**2).sum(axis=1)), 1e-30)
-    probed: set[int] = set()
-    idx = np.arange(len(cent))
-    cn_unit = cent / c_nrm[:, None]
-    for qi in range(len(q_ids)):
-        sims = cn_unit @ (q_mat[qi] / max(float(q_nrm[qi]), 1e-30))
-        for pos in np.lexsort((idx, -sims))[:nprobe]:
-            probed.add(int(pos))
-
-    luts = np.einsum("qjd,jkd->qjk", q_mat.reshape(len(q_mat), m, d_sub), cb)
-    q_dot_cent = q_mat @ cent.T  # (n_q, n_lists)
-    clut = np.einsum("ljd,jkd->ljk", cent.reshape(len(cent), m, d_sub), cb)
-    cn2 = (cb**2).sum(axis=2)
-    cent_norm2 = (cent**2).sum(axis=1)
-    bq = spark.sparkContext.broadcast(
-        (q_ids, q_nrm, luts, q_dot_cent, clut, cn2, cent_norm2)
-    )
-    keep = (k * refine_factor if refine_with is not None else k) + 1
-
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        ids, qn, lut, qdc, cl, code_n2, cent_n2 = bq.value
-        n_q, mm, _ = lut.shape
-        j_idx = np.arange(mm)
-        parts: list[pd.DataFrame] = []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            c_ids = pdf["cid"].to_numpy(np.int64)
-            lists = pdf["list_id"].to_numpy(np.int64)
-            codes_m = np.array(pdf["codes"].tolist(), dtype=np.int64)
-            res_dots = lut[:, j_idx, codes_m].sum(axis=2)  # (n_q, n)
-            dots = qdc[:, lists] + res_dots
-            vhat_n2 = (
-                cent_n2[lists]
-                + 2.0 * cl[lists[:, None], j_idx, codes_m].sum(axis=1)
-                + code_n2[j_idx, codes_m].sum(axis=1)
-            )
-            vhat_n = np.sqrt(np.maximum(vhat_n2, 0.0))
-            sims = dots / np.maximum(qn[:, None] * vhat_n[None, :], 1e-30)
-            sims = _round_half_up(sims, 4) + 0.0
-            top = min(keep, sims.shape[1])
-            for qi in range(n_q):
-                order = np.lexsort((c_ids, -sims[qi]))[:top]
-                parts.append(
-                    pd.DataFrame(
-                        {"qid": ids[qi], "cid": c_ids[order], "score": sims[qi][order]}
-                    )
-                )
-        if parts:
-            allp = pd.concat(parts, ignore_index=True)
-            yield (
-                allp.sort_values(["qid", "score", "cid"], ascending=[True, False, True])
-                .groupby("qid", sort=False)
-                .head(keep)
-            )
-        else:
-            yield pd.DataFrame({"qid": pd.Series(dtype="int64"),
-                                "cid": pd.Series(dtype="int64"),
-                                "score": pd.Series(dtype="float64")})
-
-    survivors = coded.filter(F.col("list_id").isin(sorted(probed))).select(
-        "cid", "list_id", "codes"
-    )
-    cand = survivors.mapInPandas(score, "qid long, cid long, score double")
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("cid"))
-    adc = (
-        cand.filter(F.col("cid") != F.col("qid"))
-        .withColumn("rn", F.row_number().over(w))
-    )
-    if refine_with is None:
-        return adc.filter(F.col("rn") <= k).select("qid", "cid", "score", "rn")
-    shortlist = adc.filter(F.col("rn") <= k * refine_factor).select("qid", "cid")
-    c = refine_with.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
-    ).withColumn("cn", F.expr(_norm("cv")))
-    q = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
-    ).withColumn("qn", F.expr(_norm("qv")))
-    exact = (
-        c.join(F.broadcast(shortlist), "cid")
-        .join(F.broadcast(q), "qid")
-        .withColumn(
-            "score",
-            F.round(
-                F.expr(_DOT.format(a="qv", b="cv")) / (F.col("qn") * F.col("cn")), 4
-            )
-            + F.lit(0.0),
-        )
-    )
-    w2 = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("cid"))
-    return (
-        exact.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .select("qid", "cid", "score", "rn")
-    )
-
-
 def build_ivfpq_index(
     corpus: DataFrame,
     path: str,
@@ -2562,82 +1779,76 @@ def build_ivfpq_index(
 
     ``residual=True`` trains the codebooks on IVF residuals and encodes
     ``v − centroid[list]`` (canonical IVFADC — finer resolution from
-    the same bit budget; recall win pinned in tests); the build is also
-    cheaper there: assign + encode fuse into one corpus scan.
+    the same bit budget; recall win pinned in tests).  Either way,
+    assign + encode fuse into one corpus scan.
     """
-    import numpy as np
-
     spark = corpus.sparkSession
-    samp = sorted(
-        _ivf_sample_frame(corpus, id_col, vec_col, sample, seed).collect(),
-        key=lambda r: r[0],
-    )[:sample]
-    mat = np.array([list(r[1]) for r in samp], dtype=np.float64)
-    norm = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-30)
-    cent = _kmeans(norm, n_lists, seed=seed)
-    dim = mat.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    d_sub = dim // m
-    if residual:
-        books = train_pq_residual(
-            corpus, cent, m=m, k=k_codes, id_col=id_col, vec_col=vec_col,
-            sample=sample, seed=seed,
-        )
-    else:
-        books = np.stack(
-            [
-                _kmeans_l2(mat[:, j * d_sub : (j + 1) * d_sub], k_codes, seed=seed + j)
-                for j in range(m)
-            ]
-        )
-    spark.createDataFrame(
-        [(int(j), [float(x) for x in cent[j]]) for j in range(len(cent))],
-        "list_id int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
-        [
-            (int(j), int(c), [float(x) for x in books[j][c]])
-            for j in range(m)
-            for c in range(len(books[j]))
-        ],
+    mat = _training_sample(corpus, id_col, vec_col, sample, seed)
+    cent = _train_centroids(mat, n_lists, seed)
+    books = _train_codebooks(mat, m, k_codes, seed, cent if residual else None)
+    _write_centroids(spark, path, cent)
+    kc = books.shape[1]
+    _write_artifact(
+        spark,
+        f"{path}/codebooks",
+        {
+            "j": [j for j in range(m) for _ in range(kc)],
+            "c": [c for _ in range(m) for c in range(kc)],
+            "codeword": [list(map(float, w)) for w in books.reshape(m * kc, -1)],
+        },
         "j int, c int, codeword array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebooks")
-    spark.createDataFrame(
-        [(bool(residual),)], "residual boolean"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-    if residual:
-        coded = pq_encode_residual(corpus, cent, books, id_col, vec_col)
-    else:
-        coded = pq_encode(corpus, books, id_col, vec_col).join(
-            ivf_assign(corpus, cent, id_col, vec_col).select("cid", "list_id"), "cid"
-        )
-    coded.write.partitionBy("list_id").mode("overwrite").parquet(f"{path}/codes")
+    )
+    _write_artifact(spark, f"{path}/meta", {"residual": [bool(residual)]}, "residual boolean")
+    _pq_codes(corpus, books, cent, residual, id_col, vec_col).write.partitionBy(
+        "list_id"
+    ).mode("overwrite").parquet(f"{path}/codes")
+
+
+def update_ivfpq_index(
+    corpus_delta: DataFrame,
+    path: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> None:
+    """Fold new/changed vectors into a persisted IVF×PQ index WITHOUT
+    retraining: encode the delta with the STORED codebooks and assign
+    with the STORED centroids (new vectors land exactly where a full
+    rebuild with those artifacts would put them), then keyed-upsert
+    into the list-partitioned codes table with the same
+    :func:`_upsert_lists` as :func:`update_ivf_index` (emptied-list
+    purge, replay idempotency).
+
+    Codebook/centroid drift mirrors the IVF maintenance trade: rebuild
+    via :func:`build_ivfpq_index` when the corpus has grown an order of
+    magnitude past the training sample.
+    """
+    spark = corpus_delta.sparkSession
+    cent, books, residual = _read_ivfpq_artifacts(spark, path)
+    delta = _pq_codes(corpus_delta, books, cent, residual, id_col, vec_col)
+    _upsert_lists(spark, f"{path}/codes", delta)
 
 
 def _read_ivfpq_artifacts(spark, index_path: str):
     """(centroids, codebooks, residual) from a persisted IVF×PQ index —
-    KB-scale driver reads, list/subspace order restored.  Pre-r7-late
-    indexes have no ``meta`` table and read as residual=False."""
+    KB-scale driver reads, list/subspace order restored.  An index with
+    no ``meta`` table predates the residual flag and reads as
+    residual=False; a ``meta`` table that exists but cannot be read
+    raises (scoring residual codes as raw would return wrong neighbours
+    without an error)."""
     import numpy as np
 
-    cent_rows = sorted(
-        spark.read.parquet(f"{index_path}/centroids").collect(),
-        key=lambda r: r["list_id"],
-    )
-    cent = np.array([list(r["centroid"]) for r in cent_rows], dtype=np.float64)
+    from etl_rust_spark.sources.checkpoint import sink_has_data
+
+    cent = _read_centroids(spark, index_path)
     cb_rows = spark.read.parquet(f"{index_path}/codebooks").collect()
     m = 1 + max(r["j"] for r in cb_rows)
     kc = 1 + max(r["c"] for r in cb_rows)
     books = np.empty((m, kc, len(cb_rows[0]["codeword"])), dtype=np.float64)
     for r in cb_rows:
         books[r["j"], r["c"]] = list(r["codeword"])
-    try:
-        residual = bool(
-            spark.read.parquet(f"{index_path}/meta").collect()[0]["residual"]
-        )
-    except Exception:
-        residual = False
+    residual = sink_has_data(spark, f"{index_path}/meta") and bool(
+        spark.read.parquet(f"{index_path}/meta").collect()[0]["residual"]
+    )
     return cent, books, residual
 
 
@@ -2651,29 +1862,116 @@ def ivfpq_search(
     refine_with: DataFrame | None = None,
     refine_factor: int = 4,
 ) -> DataFrame:
-    """Search a persisted IVF×PQ index: probe the coarse centroids,
-    read ONLY the probed ``list_id`` partitions of the codes table
-    (directory pruning, same discipline as :func:`ivf_search` —
-    plan-asserted in tests), ADC-score the surviving codes, optionally
-    IVFADC+R-refine against a caller-supplied raw-vector table.
+    """Search a persisted IVF×PQ index: (qid, cid, score, rn), rn ≤ k.
 
-    Equals :func:`ivf_pq_topk` (or :func:`pq_residual_topk` for a
-    ``residual=True`` build — the meta table records which) run with
-    the index's artifacts — pinned in tests — while scanning
-    ``nprobe/n_lists`` of the corpus as m-byte codes."""
+    The bounded query set collects once (:func:`_collect_queries`) and
+    probes its ``nprobe`` nearest lists (:func:`_probe`); only the
+    probed ``list_id`` partitions of the codes table are read
+    (directory pruning, plan-asserted in tests).  Every query scores
+    every surviving code row by ADC: cosine(q, v̂) with
+    ``v̂ = centroid[list] + recon(codes)`` decomposes into table lookups
+
+    - ``dot(q, v̂) = dot(q, cent_l) + Σⱼ lut[q, j, codeⱼ]``, the lut built
+      from the query (the dot is linear),
+    - ``‖v̂‖² = ‖cent_l‖² + 2·Σⱼ clut[l, j, codeⱼ] + Σⱼ cn2[j, codeⱼ]``
+      with ``clut[l, j, c] = dot(cent_l_subⱼ, codeword)`` ((n_lists, m,
+      k) — KBs).
+
+    A raw (``residual=False``) index is the same formula over ZERO
+    centroid tables: every added 0.0 is exact, so both layouts share one
+    scorer.  The codes never move; each task keeps its top candidates
+    per query and one window ranks them.  Quantization erases
+    within-cluster distinctions, so ADC ranks the right NEIGHBORHOOD but
+    not reliably the exact nearest row: ``refine_with`` (the raw-vector
+    table) re-ranks the top ``k·refine_factor`` ADC candidates by exact
+    rounded cosine — IVFADC+R; the shortlist broadcasts, the raw table
+    never shuffles.  Recall vs exact :func:`cosine_topk` is pinned in
+    tests.
+    """
+    import numpy as np
+
     spark = queries.sparkSession
+    q_ids, q_mat, q_nrm = _collect_queries(queries, id_col, vec_col, "ivfpq_search")
     cent, books, residual = _read_ivfpq_artifacts(spark, index_path)
-    coded = spark.read.parquet(f"{index_path}/codes")
-    fn = pq_residual_topk if residual else ivf_pq_topk
-    return fn(
-        queries,
-        coded,
-        cent,
-        books,
-        k=k,
-        nprobe=nprobe,
-        id_col=id_col,
-        vec_col=vec_col,
-        refine_with=refine_with,
-        refine_factor=refine_factor,
+    lists = sorted({int(j) for j in _probe(q_mat, cent, nprobe).ravel()})
+    if not residual:
+        cent = np.zeros_like(cent)
+    m, _kc, d_sub = books.shape
+    bq = spark.sparkContext.broadcast(
+        (
+            q_ids,
+            q_nrm,
+            np.einsum("qjd,jkd->qjk", q_mat.reshape(len(q_mat), m, d_sub), books),
+            q_mat @ cent.T,
+            np.einsum("ljd,jkd->ljk", cent.reshape(len(cent), m, d_sub), books),
+            (books**2).sum(axis=2),
+            (cent**2).sum(axis=1),
+        )
     )
+    # per-task candidate width: the refine re-ranks the top
+    # k·refine_factor ADC rows; +1 so dropping a self-match still
+    # leaves enough.
+    keep = (k * refine_factor if refine_with is not None else k) + 1
+
+    def score(batches):
+        import numpy as np
+        import pandas as pd
+
+        ids, qn, lut, qdc, cl, code_n2, cent_n2 = bq.value
+        n_q, mm, _ = lut.shape
+        j_idx = np.arange(mm)
+        parts: list[pd.DataFrame] = []
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            c_ids = pdf["cid"].to_numpy(np.int64)
+            lists_ = pdf["list_id"].to_numpy(np.int64)
+            codes_m = np.array(pdf["codes"].tolist(), dtype=np.int64)
+            dots = qdc[:, lists_] + lut[:, j_idx, codes_m].sum(axis=2)  # (n_q, n)
+            vhat_n2 = (
+                cent_n2[lists_]
+                + 2.0 * cl[lists_[:, None], j_idx, codes_m].sum(axis=1)
+                + code_n2[j_idx, codes_m].sum(axis=1)
+            )
+            vhat_n = np.sqrt(np.maximum(vhat_n2, 0.0))
+            sims = dots / np.maximum(qn[:, None] * vhat_n[None, :], 1e-30)
+            sims = _round_half_up(sims, 4) + 0.0
+            top = min(keep, sims.shape[1])
+            for qi in range(n_q):
+                order = np.lexsort((c_ids, -sims[qi]))[:top]
+                parts.append(
+                    pd.DataFrame(
+                        {"qid": ids[qi], "cid": c_ids[order], "score": sims[qi][order]}
+                    )
+                )
+        if parts:
+            allp = pd.concat(parts, ignore_index=True)
+            yield (
+                allp.sort_values(["qid", "score", "cid"], ascending=[True, False, True])
+                .groupby("qid", sort=False)
+                .head(keep)
+            )
+
+    survivors = spark.read.parquet(f"{index_path}/codes").filter(
+        F.col("list_id").isin(lists)
+    )
+    adc = (
+        survivors.select("cid", "list_id", "codes")
+        .mapInPandas(score, "qid long, cid long, score double")
+        .filter(F.col("cid") != F.col("qid"))
+    )
+    if refine_with is None:
+        return _top_k(adc, k, "score")
+    shortlist = _top_k(adc, k * refine_factor, "score").select("qid", "cid")
+    c = refine_with.select(
+        F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
+    ).withColumn("cn", F.expr(_norm("cv")))
+    q = queries.select(
+        F.col(id_col).alias("qid"), F.col(vec_col).alias("qv")
+    ).withColumn("qn", F.expr(_norm("qv")))
+    exact = (
+        c.join(F.broadcast(shortlist), "cid")
+        .join(F.broadcast(q), "qid")
+        .withColumn("score", _cos())
+    )
+    return _top_k(exact, k, "score")

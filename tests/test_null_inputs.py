@@ -144,10 +144,28 @@ def test_ivf_index_kernels_skip_null_embeddings(spark, tmp_path):
     assert 100 not in got and {0, 1} <= got
 
 
+def test_semantic_dedupe_keeps_null_embedding_row(spark):
+    """semantic_dedupe must not crash on a NULL embedding: its cluster
+    assignment skips the row, which is never compared and so is kept."""
+    from pyspark.sql import types as T
+
+    from etl_rust_spark.operators import similarity
+
+    schema = T.StructType([
+        T.StructField("vec_id", T.LongType()),
+        T.StructField("embedding", T.ArrayType(T.FloatType())),
+    ])
+    rows = [(i, [float((i * 7 + j) % 5 - 2) for j in range(8)]) for i in range(40)]
+    rows += [(100, None)]
+    emb = spark.createDataFrame(rows, schema)
+    kept = {r.vec_id for r in similarity.semantic_dedupe(emb, n_clusters=4).collect()}
+    assert 100 in kept
+
+
 def test_pq_kernels_skip_null_embeddings(spark, tmp_path):
-    """pq_encode / pq_encode_residual / pq_fixed_topk / ivfpq build+
-    search must skip NULL embeddings (the Arrow-kernel null-guard
-    contract), for both raw and residual layouts."""
+    """pq_encode and ivfpq build + search must skip NULL embeddings
+    (the Arrow-kernel null-guard contract), for both raw and residual
+    layouts."""
     from pyspark.sql import types as T
 
     from etl_rust_spark.operators import similarity
